@@ -68,9 +68,9 @@ def _i(df: DataFrame, *cols: str) -> DataFrame:
 # ---------------------------------------------------------------- queries
 
 def q_rbac_prefilter_topk(spark, sf_dir):
-    # impl="numpy": masked local_topk pinned row-identical to the expr
-    # plan (test_knn.py); the DuckDB oracle replays either. The Q-bit
-    # permission mask is built INSIDE the measured call (r10): the
+    # the masked local_topk kernel, pinned row-identical to knn.ground_truth
+    # (test_knn.py), whose expression plan the DuckDB oracle replays. The
+    # Q-bit permission mask is built INSIDE the measured call (r10): the
     # reference's prefilter baseline times the permission-resolution
     # subquery per query (common_function.py:79), and unlike IVF/PQ/truth
     # artifacts the mask depends on the query workload, not just the
@@ -78,27 +78,27 @@ def q_rbac_prefilter_topk(spark, sf_dir):
     # the strategy being modeled. knn_prefilter(doc_masks=) remains the
     # build-once/search-many arm for production repeated-workload use.
     t = _rbac(spark, sf_dir)
-    out = knn.knn_prefilter(t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"], k=TOPK, impl="numpy")
+    out = knn.knn_prefilter(t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"], k=TOPK)
     return _i(out, "query_id", "block_id", "document_id", "rank")
 
 
 def q_rbac_postfilter_topk(spark, sf_dir):
-    # impl="numpy": the global phase rides local_topk's Arrow/BLAS pre-cut
-    # (the hash-green rbac_layouts kernel), pinned ≡ expr
+    # the global phase rides local_topk's Arrow/BLAS pre-cut; the reference
+    # postfilter built from knn.ground_truth is pinned ≡ in test_knn.py
     t = _rbac(spark, sf_dir)
-    out = knn.knn_postfilter(t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"], k=TOPK, expansion=4, impl="numpy")
+    out = knn.knn_postfilter(t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"], k=TOPK, expansion=4)
     return _i(out, "query_id", "block_id", "document_id", "rank")
 
 
 def q_rbac_role_partition_topk(spark, sf_dir):
     t = _rbac(spark, sf_dir)
-    out = knn.knn_role_partition(t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"], k=TOPK, impl="numpy")
+    out = knn.knn_role_partition(t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"], k=TOPK)
     return _i(out, "query_id", "block_id", "document_id", "rank")
 
 
 def q_rbac_comb_role_topk(spark, sf_dir):
     t = _rbac(spark, sf_dir)
-    out = knn.knn_comb_role_partition(t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"], k=TOPK, impl="numpy")
+    out = knn.knn_comb_role_partition(t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"], k=TOPK)
     return _i(out, "query_id", "block_id", "document_id", "rank")
 
 
@@ -107,13 +107,13 @@ def q_rbac_logical_role_topk(spark, sf_dir):
     partitions over the shared vector table — the latency half of the
     logical-vs-physical trade (space_report prices the storage half)."""
     t = _rbac(spark, sf_dir)
-    out = knn.knn_role_partition_logical(t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"], k=TOPK, impl="numpy")
+    out = knn.knn_role_partition_logical(t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"], k=TOPK)
     return _i(out, "query_id", "block_id", "document_id", "rank")
 
 
 def q_rbac_rls_topk(spark, sf_dir):
     t = _rbac(spark, sf_dir)
-    out = knn.knn_rls(t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"], k=TOPK, impl="numpy")
+    out = knn.knn_rls(t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"], k=TOPK)
     return _i(out, "query_id", "block_id", "document_id", "rank")
 
 
@@ -128,7 +128,7 @@ def q_rbac_qdtree_topk(spark, sf_dir):
     assigned = _cached(("qdtree_assigned", sf_dir), lambda: partitioning.qdtree_assignment(
         t["documentblocks"], t["permission_assignment"], max_leaf_size=64, max_depth=4
     ).localCheckpoint())
-    out = knn.knn_qdtree(assigned, t["queries"], t["query_roles"], t["permission_assignment"], k=TOPK, impl="numpy")
+    out = knn.knn_qdtree(assigned, t["queries"], t["query_roles"], t["permission_assignment"], k=TOPK)
     return _i(out, "query_id", "block_id", "document_id", "rank")
 
 
@@ -194,7 +194,7 @@ def q_rbac_layouts_topk(spark, sf_dir):
             "query_id", F.lit(10).cast(rtype).alias("role_id")
         )
     )
-    churn_pred = dynamic.knn_role_routed(store3, pr3, qs, qr_after, pa_after, k=TOPK, impl="numpy")
+    churn_pred = dynamic.knn_role_routed(store3, pr3, qs, qr_after, pa_after, k=TOPK)
     cost_rows = decision.select(
         F.col("partition_id").alias("query_id"),
         F.col("chosen").cast("long").alias("block_id"),
@@ -209,15 +209,15 @@ def q_rbac_layouts_topk(spark, sf_dir):
         t["queries"], t["query_roles"], t["permission_assignment"]
     )
     parts = [
-        ("role_partition", knn.knn_role_partition(*args, k=TOPK, impl="numpy")),
+        ("role_partition", knn.knn_role_partition(*args, k=TOPK)),
         # r6: the POINTER variant of the same layout — membership lists
         # over one shared vector table (logical_partition_benchmark
         # pointer_hnsw_index/shared_vector_table parity); identical
         # results, replication-free storage, one fetch join at search
-        ("logical_role", knn.knn_role_partition_logical(*args, k=TOPK, impl="numpy")),
-        ("comb_role", knn.knn_comb_role_partition(*args, k=TOPK, impl="numpy")),
-        ("rls", knn.knn_rls(*args, k=TOPK, impl="numpy", doc_masks=layout_masks)),
-        ("qdtree", knn.knn_qdtree(assigned, t["queries"], t["query_roles"], t["permission_assignment"], k=TOPK, impl="numpy", doc_masks=layout_masks)),
+        ("logical_role", knn.knn_role_partition_logical(*args, k=TOPK)),
+        ("comb_role", knn.knn_comb_role_partition(*args, k=TOPK)),
+        ("rls", knn.knn_rls(*args, k=TOPK, doc_masks=layout_masks)),
+        ("qdtree", knn.knn_qdtree(assigned, t["queries"], t["query_roles"], t["permission_assignment"], k=TOPK, doc_masks=layout_masks)),
         ("role_churn", churn_pred),
         ("role_churn_cost", cost_rows),
     ]
@@ -457,7 +457,7 @@ def q_generated_rbac_topk(spark, sf_dir):
     chain is one declarative plan."""
     t = _rbac(spark, sf_dir)
     queries, qroles, pa, _ = _tree_workload(spark, t)
-    out = knn.knn_prefilter(t["documentblocks"], queries, qroles, pa, k=TOPK, impl="numpy")
+    out = knn.knn_prefilter(t["documentblocks"], queries, qroles, pa, k=TOPK)
     return _i(out, "query_id", "block_id", "document_id", "rank")
 
 
@@ -484,7 +484,7 @@ def q_sharing_tree_rbac_topk(spark, sf_dir):
         .select("query_id", "role_id")
         .distinct()
     )
-    out = knn.knn_prefilter(t["documentblocks"], queries, qroles, g["permission_assignment"], k=TOPK, impl="numpy")
+    out = knn.knn_prefilter(t["documentblocks"], queries, qroles, g["permission_assignment"], k=TOPK)
     return _i(out, "query_id", "block_id", "document_id", "rank")
 
 
@@ -496,10 +496,7 @@ def q_rbac_prefilter_zipf_topk(spark, sf_dir):
     t = _rbac(spark, sf_dir)
     queries = derive.derive_queries_zipf(t["embeddings"], n_queries=50, seed=7)
     qroles = derive.query_roles(queries)
-    out = knn.knn_prefilter(
-        t["documentblocks"], queries, qroles, t["permission_assignment"], k=TOPK,
-        impl="numpy",
-    )
+    out = knn.knn_prefilter(t["documentblocks"], queries, qroles, t["permission_assignment"], k=TOPK)
     return _i(out, "query_id", "block_id", "document_id", "rank")
 
 
@@ -2377,7 +2374,7 @@ def q_rbac_dynamic_budget_topk(spark, sf_dir):
     # Store build + routed search still run per call.
     opt = _cached(("budget_opt", sf_dir), _optimize)
     store = layout.build_budget_store(t["documentblocks"], t["permission_assignment"], opt["assignment"])
-    out = layout.knn_budget(store, t["queries"], t["query_roles"], opt["routing"], opt["assignment"], k=TOPK, impl="numpy")
+    out = layout.knn_budget(store, t["queries"], t["query_roles"], opt["routing"], opt["assignment"], k=TOPK)
     return _i(out, "query_id", "block_id", "document_id", "rank")
 
 

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from vectorsearch_rbac_spark.sources import load_table
 from vectorsearch_rbac_spark.rbac import derive
-from vectorsearch_rbac_spark.operators import knn, ivf, ann, dynamic, partitioning
+from vectorsearch_rbac_spark.operators import knn, ivf, ann, dynamic, layout, partitioning
 
 
 @pytest.fixture(scope="module")
@@ -31,8 +31,9 @@ def _ids(df):
 
 def test_exact_strategies_agree(t):
     args = (t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"])
-    truth = _ids(knn.knn_prefilter(*args, k=10))
+    truth = _ids(knn.ground_truth(*args, k=10))
     assert truth
+    assert _ids(knn.knn_prefilter(*args, k=10)) == truth
     assert _ids(knn.knn_role_partition(*args, k=10)) == truth
     assert _ids(knn.knn_comb_role_partition(*args, k=10)) == truth
     assert _ids(knn.knn_rls(*args, k=10)) == truth
@@ -1228,34 +1229,140 @@ def test_role_churn_search_exact_and_delete_semantics(t, spark):
         )
     )
     pred = dynamic.knn_role_routed(store3, pr3, qs, qr_after, pa_after, k=10)
-    truth = knn.knn_prefilter(blocks, qs, qr_after, pa_after, k=10)
+    truth = knn.ground_truth(blocks, qs, qr_after, pa_after, k=10)
     assert pred.exceptAll(truth).count() == 0
     assert truth.exceptAll(pred).count() == 0
     assert pred.count() == truth.count() > 0
 
 
-def test_prefilter_numpy_kernel_matches_expr(t):
-    """The gather-kernel pre-cut (knn_prefilter impl="numpy") must return
-    EXACTLY the expression plan's rows — same permitted join, same rounded
-    distances, same (distance, block_id) tie order."""
-    args = (t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"])
-    a = sorted(map(tuple, knn.knn_prefilter(*args, k=10).collect()))
-    b = sorted(map(tuple, knn.knn_prefilter(*args, k=10, impl="numpy").collect()))
-    assert a == b and len(a) > 0
+# ----------------------------------------------------------------------
+# One parity matrix: every exact strategy ≡ knn.ground_truth, the one
+# expression-plan reference, for every metric, row for row.
+
+ZERO_BLOCK = 10**9  # block id of the synthetic zero-norm corpus row
+_METRICS = ("l2", "cosine", "ip", "l1")
 
 
-def test_postfilter_numpy_kernel_matches_expr(t):
-    """knn_postfilter impl="numpy" (local_topk global phase) ≡ expr,
-    for every metric (the r10 gate-widening pin)."""
-    args2 = (t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"])
-    for metric in ("cosine", "l1", "ip"):
-        a = sorted(map(tuple, knn.knn_postfilter(*args2, k=10, expansion=4, metric=metric).collect()))
-        b = sorted(map(tuple, knn.knn_postfilter(*args2, k=10, expansion=4, metric=metric, impl="numpy").collect()))
-        assert a == b and len(a) > 0, metric
+def _rows(df):
+    """Sorted result tuples; a NaN distance compares equal to NaN."""
+    return sorted(
+        tuple("nan" if isinstance(v, float) and v != v else v for v in r)
+        for r in df.collect()
+    )
+
+
+@pytest.fixture(scope="module")
+def pin(t, spark):
+    """The parity-matrix workload.
+
+    - Q=70 queries (5 base × 14 jittered copies): two packed mask words,
+      so the second word and bit 63 (the sign bit of the first) are used.
+    - The corpus plus one zero-norm block on a permitted document: under
+      cosine its distance is NaN, which must sort last and never beat a
+      real neighbour (a pandas→Arrow NaN→null would rank it first).
+    - The 5-partition role store (partition p hosts roles 2p, 2p+1) for
+      ``dynamic.knn_role_routed``, and the budget layout for
+      ``layout.knn_budget``, both built over that corpus."""
+    rep = F.broadcast(spark.range(14).select(F.col("id").alias("r")))
+    qid = (F.col("query_id") * 1000 + F.col("r")).alias("query_id")
+    qs = t["queries"].crossJoin(rep).select(
+        qid, "user_id",
+        F.transform("query_vector", lambda x: x + F.col("r").cast("float") * 0.001).alias("query_vector"),
+    ).cache()
+    qr = t["query_roles"].crossJoin(rep).select(qid, "role_id").cache()
+    assert qs.count() == 70
+    pa = t["permission_assignment"]
+    dim = len(t["queries"].select("query_vector").first()[0])
+    zero = spark.createDataFrame(
+        [(ZERO_BLOCK, 0, [0.0] * dim, 0)],
+        t["documentblocks"].schema,
+    )
+    assert pa.where(F.col("document_id") == 0).count() > 0
+    blocks = t["documentblocks"].unionByName(zero).cache()
+
+    pr = spark.createDataFrame(
+        [(p, r) for p in range(5) for r in (2 * p, 2 * p + 1)],
+        "partition_id long, role_id int",
+    )
+    role_store = (
+        blocks.join(pa, "document_id").join(F.broadcast(pr), "role_id")
+        .select("partition_id", "block_id", "document_id", "vector").distinct()
+    )
+    sel = derive.block_selectivity(t["user_roles"], pa, blocks)
+    opt = layout.optimize_layout(blocks, pa, qs, t["user_roles"], selectivity=sel, alpha=1.5)
+    return {
+        "args": (blocks, qs, qr, pa),
+        "assigned": partitioning.qdtree_assignment(blocks, pa, max_leaf_size=64, max_depth=4),
+        "role_store": role_store,
+        "partition_roles": pr,
+        "budget_store": layout.build_budget_store(blocks, pa, opt["assignment"]),
+        "opt": opt,
+        "truth": {},
+    }
+
+
+def _truth(pin, metric):
+    if metric not in pin["truth"]:
+        pin["truth"][metric] = _rows(knn.ground_truth(*pin["args"], k=10, metric=metric))
+    return pin["truth"][metric]
+
+
+def _postfilter_reference(pin, metric, k=10, expansion=4):
+    """Postfilter from ground_truth: under a relation that permits every
+    document it is the global top-(k·e); the permission join and top-k
+    follow."""
+    blocks, qs, qr, pa = pin["args"]
+    everyone = qs.select("query_id", F.lit(-1).alias("role_id"))
+    all_docs = blocks.select("document_id", F.lit(-1).alias("role_id")).distinct()
+    top_ke = knn.ground_truth(blocks, qs, everyone, all_docs, k * expansion, metric).drop("rank")
+    qdocs = qr.join(pa, "role_id").select("query_id", "document_id").distinct()
+    return knn.topk_per_query(top_ke.join(qdocs, ["query_id", "document_id"]), k).select(
+        "query_id", "block_id", "document_id", "distance", "rank"
+    )
+
+
+_STRATEGIES = {
+    "prefilter": lambda p, m: knn.knn_prefilter(*p["args"], k=10, metric=m),
+    "rls": lambda p, m: knn.knn_rls(*p["args"], k=10, metric=m),
+    "role": lambda p, m: knn.knn_role_partition(*p["args"], k=10, metric=m),
+    "logical": lambda p, m: knn.knn_role_partition_logical(*p["args"], k=10, metric=m),
+    "comb": lambda p, m: knn.knn_comb_role_partition(*p["args"], k=10, metric=m),
+    "qdtree": lambda p, m: knn.knn_qdtree(p["assigned"], *p["args"][1:], k=10, metric=m),
+    "role_routed": lambda p, m: dynamic.knn_role_routed(
+        p["role_store"], p["partition_roles"], *p["args"][1:], k=10, metric=m
+    ),
+    "budget": lambda p, m: layout.knn_budget(
+        p["budget_store"], p["args"][1], p["args"][2],
+        p["opt"]["routing"], p["opt"]["assignment"], k=10, metric=m,
+    ),
+    "postfilter": lambda p, m: knn.knn_postfilter(*p["args"], k=10, expansion=4, metric=m),
+}
+
+
+@pytest.mark.parametrize("metric", _METRICS)
+@pytest.mark.parametrize("strategy", sorted(_STRATEGIES))
+def test_exact_strategy_matches_ground_truth(pin, strategy, metric):
+    """Every exact strategy returns EXACTLY ground_truth's rows: same
+    permitted set, same 6-dp rounded distances, same (distance, block_id)
+    tie order. Postfilter (recall < 1) is held to the postfilter answer
+    built from ground_truth."""
+    want = (
+        _rows(_postfilter_reference(pin, metric)) if strategy == "postfilter"
+        else _truth(pin, metric)
+    )
+    got = _rows(_STRATEGIES[strategy](pin, metric))
+    assert got == want and len(got) > 0
+
+
+def test_impl_shim_accepts_only_numpy(t):
+    """prefilter, postfilter, comb and rls keep a one-value ``impl``
+    argument for existing callers: ``"numpy"`` is the default path, and
+    any other value raises instead of silently picking a plan."""
     args = (t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"])
-    a = sorted(map(tuple, knn.knn_postfilter(*args, k=10, expansion=4).collect()))
-    b = sorted(map(tuple, knn.knn_postfilter(*args, k=10, expansion=4, impl="numpy").collect()))
-    assert a == b and len(a) > 0
+    for fn in (knn.knn_prefilter, knn.knn_postfilter, knn.knn_comb_role_partition, knn.knn_rls):
+        with pytest.raises(ValueError, match="only 'numpy'"):
+            fn(*args, k=10, impl="expr")
+        assert _rows(fn(*args, k=10, impl="numpy")) == _rows(fn(*args, k=10)), fn.__name__
 
 
 def test_l2_bruteforce_numpy_kernel_matches_expr(t):
@@ -1294,36 +1401,6 @@ def test_int8_numpy_kernel_matches_expr(t):
     assert a == b and len(a) > 0
 
 
-def test_role_family_numpy_kernels_match_expr(t, spark):
-    """Every role-partition-family strategy's gather-kernel path
-    (impl="numpy", grouped pre-cut where the strategy has a local window)
-    must return EXACTLY the expression plan's rows."""
-    args = (t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"])
-    for fn, kw in (
-        (knn.knn_role_partition, {}),
-        (knn.knn_role_partition_logical, {}),
-        (knn.knn_comb_role_partition, {}),
-        (knn.knn_rls, {}),
-    ):
-        a = sorted(map(tuple, fn(*args, k=10, **kw).collect()))
-        b = sorted(map(tuple, fn(*args, k=10, impl="numpy", **kw).collect()))
-        assert a == b and len(a) > 0, fn.__name__
-
-
-def test_qdtree_mask_kernel_matches_expr(t):
-    """knn_qdtree impl="numpy" (leaf-pruned scan → Q-bit masked local_topk)
-    must return EXACTLY the expression plan's rows — the r10 plan-shape fix
-    for the last strategy that replicated the vector payload per
-    (query, permitted block)."""
-    args = (t["queries"], t["query_roles"], t["permission_assignment"])
-    assigned = partitioning.qdtree_assignment(
-        t["documentblocks"], t["permission_assignment"], max_leaf_size=64, max_depth=4
-    )
-    a = sorted(map(tuple, knn.knn_qdtree(assigned, *args, k=10).collect()))
-    b = sorted(map(tuple, knn.knn_qdtree(assigned, *args, k=10, impl="numpy").collect()))
-    assert a == b and len(a) > 0
-
-
 def test_local_topk_query_chunking_row_identical(t):
     """Query-axis chunking (q_chunk) must be row-identical to the unchunked
     kernel, masked and unmasked — the per-dim folds are elementwise per
@@ -1343,56 +1420,32 @@ def test_local_topk_query_chunking_row_identical(t):
 def test_stale_doc_masks_fail_loudly(t):
     """A doc_masks table built over a DIFFERENT query set must raise at
     kernel time (word-count contract), never misalign bit positions and
-    return wrong rows silently (ADVICE r9)."""
+    return wrong rows silently (ADVICE r9) — on every strategy that
+    accepts a prebuilt mask table."""
     blocks, qs = t["documentblocks"], t["queries"]
+    assigned = partitioning.qdtree_assignment(
+        blocks, t["permission_assignment"], max_leaf_size=64, max_depth=4
+    )
     good = knn._query_doc_masks(qs, t["query_roles"], t["permission_assignment"])
     # pad to one extra word: a mask built for a larger query set than the
     # one being searched (ceil(Q/64)+1 words vs ceil(Q/64) expected)
     stale = good.withColumn(
         "qmask", F.concat(F.col("qmask"), F.array(F.lit(0).cast("long")))
     )
-    with pytest.raises(Exception, match="qmask word count"):
-        knn.knn_prefilter(
-            blocks, qs, t["query_roles"], t["permission_assignment"],
-            k=5, impl="numpy", doc_masks=stale,
-        ).collect()
     # same word count but a DIFFERENT query-id set: the per-row query-set
     # fingerprint must catch what the word count cannot
     sq = qs.withColumn("query_id", F.col("query_id") + 1)
     sqr = t["query_roles"].withColumn("query_id", F.col("query_id") + 1)
     wrongset = knn._query_doc_masks(sq, sqr, t["permission_assignment"])
-    with pytest.raises(Exception, match="query-set hash"):
-        knn.knn_prefilter(
-            blocks, qs, t["query_roles"], t["permission_assignment"],
-            k=5, impl="numpy", doc_masks=wrongset,
-        ).collect()
-
-
-def test_mask_kernel_multiword_parity(t, spark):
-    """Kernel parity at Q=70 — the fixture workload has Q<64, so the
-    multi-word mask unpack (2 packed longs per row, including bit 63 =
-    the SIGN bit of the first word) is otherwise never pinned ≡ expr."""
-    qs = (
-        t["queries"]
-        .crossJoin(F.broadcast(spark.range(14).select(F.col("id").alias("r"))))
-        .select(
-            (F.col("query_id") * 1000 + F.col("r")).alias("query_id"),
-            "user_id",
-            F.transform(
-                "query_vector", lambda x: x + F.col("r").cast("double") * 0.001
-            ).alias("query_vector"),
-        )
-    )
-    qroles = (
-        t["query_roles"]
-        .crossJoin(F.broadcast(spark.range(14).select(F.col("id").alias("r"))))
-        .select((F.col("query_id") * 1000 + F.col("r")).alias("query_id"), "role_id")
-    )
-    assert qs.count() == 70
-    args = (t["documentblocks"], qs, qroles, t["permission_assignment"])
-    a = sorted(map(tuple, knn.knn_prefilter(*args, k=10).collect()))
-    b = sorted(map(tuple, knn.knn_prefilter(*args, k=10, impl="numpy").collect()))
-    assert a == b and len(a) > 0
+    for fn, corpus in (
+        (knn.knn_prefilter, blocks), (knn.knn_rls, blocks), (knn.knn_qdtree, assigned),
+    ):
+        for masks, err in ((stale, "qmask word count"), (wrongset, "query-set hash")):
+            with pytest.raises(Exception, match=err):
+                fn(
+                    corpus, qs, t["query_roles"], t["permission_assignment"],
+                    k=5, doc_masks=masks,
+                ).collect()
 
 
 def test_doc_masks_persist_roundtrip(t, spark, tmp_path):
@@ -1405,41 +1458,19 @@ def test_doc_masks_persist_roundtrip(t, spark, tmp_path):
     path = str(tmp_path / "doc_masks")
     masks.write.mode("overwrite").parquet(path)
     reloaded = spark.read.parquet(path)
-    a = sorted(map(tuple, knn.knn_prefilter(*args, k=10, impl="numpy").collect()))
-    b = sorted(map(tuple, knn.knn_prefilter(*args, k=10, impl="numpy", doc_masks=reloaded).collect()))
-    assert a == b and len(a) > 0
-
-
-def test_role_routed_numpy_kernel_matches_expr(t, spark):
-    """dynamic.knn_role_routed impl="numpy" (per-(query, partition)
-    gather pre-cut) ≡ expr on a 5-partition role store."""
-    blocks, pa, qs, qr = (
-        t["documentblocks"], t["permission_assignment"], t["queries"], t["query_roles"]
-    )
-    pr = spark.createDataFrame(
-        [(p, r) for p in range(5) for r in (2 * p, 2 * p + 1)],
-        "partition_id long, role_id int",
-    )
-    store = (
-        blocks.join(pa, "document_id").join(F.broadcast(pr), "role_id")
-        .select("partition_id", "block_id", "document_id", "vector").distinct()
-    )
-    a = sorted(map(tuple, dynamic.knn_role_routed(store, pr, qs, qr, pa, k=10).collect()))
-    b = sorted(map(tuple, dynamic.knn_role_routed(store, pr, qs, qr, pa, k=10, impl="numpy").collect()))
+    a = sorted(map(tuple, knn.knn_prefilter(*args, k=10).collect()))
+    b = sorted(map(tuple, knn.knn_prefilter(*args, k=10, doc_masks=reloaded).collect()))
     assert a == b and len(a) > 0
 
 
 def test_gather_kernel_ip_and_zero_norm_cosine_parity(t, spark):
-    """Edge-metric parity for the gather kernel: ip distances are NEGATIVE
-    (half-away rounding must match F.round), and a zero-norm corpus vector
-    under cosine must yield NaN that sorts LAST in both paths (the
-    pandas→Arrow NaN→null mask would otherwise rank it first)."""
-    args = (t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"])
-    for metric in ("ip", "l1"):
-        a = sorted(map(tuple, knn.knn_prefilter(*args, k=10, metric=metric).collect()))
-        b = sorted(map(tuple, knn.knn_prefilter(*args, k=10, metric=metric, impl="numpy").collect()))
-        assert a == b and len(a) > 0, metric
-    # synthetic zero-norm row: it must never beat a real neighbor
+    """Edge-metric parity for the gather kernel against the expression
+    window, on a corpus small enough that every row is ranked: ip
+    distances are NEGATIVE (half-away rounding must match F.round), and
+    a zero-norm corpus vector under cosine must yield NaN that sorts LAST
+    (the pandas→Arrow NaN→null mask would otherwise rank it first)."""
+    from vectorsearch_rbac_spark.functions import vector as V
+
     dim = len(t["queries"].select("query_vector").first()[0])
     blocks = t["documentblocks"].limit(20).select(
         "block_id", "document_id", "vector"
@@ -1448,20 +1479,17 @@ def test_gather_kernel_ip_and_zero_norm_cosine_parity(t, spark):
     ))
     q = t["queries"].limit(3)
     joined = blocks.crossJoin(F.broadcast(q.select("query_id")))
-    a = sorted(map(tuple, knn.topk_per_query(
-        joined.join(F.broadcast(q.select("query_id", "query_vector")), "query_id")
-        .select("query_id", "block_id", "document_id",
-                F.round(__import__("vectorsearch_rbac_spark.functions.vector", fromlist=["cosine_distance"]).cosine_distance("vector", "query_vector"), 6).alias("distance")),
-        25).collect()))
-    b = sorted(map(tuple, knn.topk_per_query(
-        knn._gather_local_topk(joined, q, 25, metric="cosine"), 25).collect()))
-    assert len(a) == len(b) == 3 * 21
-    for ra, rb in zip(a, b):
-        assert ra[:3] == rb[:3] and ra[4] == rb[4]
-        assert (ra[3] == rb[3]) or (ra[3] != ra[3] and rb[3] != rb[3])
-    # the zero-norm row is ranked LAST for every query in both paths
-    assert all(r[4] == 21 for r in a if r[1] == 999999)
-    assert sum(1 for r in b if r[1] == 999999) == 3
+    for metric, dist in (("ip", V.neg_inner_product), ("cosine", V.cosine_distance)):
+        a = _rows(knn.topk_per_query(
+            joined.join(F.broadcast(q.select("query_id", "query_vector")), "query_id")
+            .select("query_id", "block_id", "document_id",
+                    F.round(dist("vector", "query_vector"), 6).alias("distance")),
+            25))
+        b = _rows(knn.topk_per_query(
+            knn._gather_local_topk(joined, q, 25, metric=metric), 25))
+        assert a == b and len(a) == 3 * 21, metric
+    # the zero-norm row is ranked LAST for every query
+    assert [r[4] for r in a if r[1] == 999999] == [21, 21, 21]
 
 
 def test_global_graph_postfilter_recall_floor(spark, sf_dir):

@@ -138,19 +138,3 @@ def test_scan_plan_prefers_dedicated_partitions(t, opt):
         reachable = holders[r["atom_key"]] & route
         best = min(reachable, key=lambda p: (loads[p], p))
         assert r["partition_id"] == best
-
-
-def test_knn_budget_numpy_kernel_matches_expr(t, opt):
-    """knn_budget impl="numpy" (gather-kernel pre-cut over the scan-plan
-    pairs) ≡ the expression plan row-for-row."""
-    store = layout.build_budget_store(
-        t["documentblocks"], t["permission_assignment"], opt["assignment"]
-    )
-    a = sorted(map(tuple, layout.knn_budget(
-        store, t["queries"], t["query_roles"], opt["routing"], opt["assignment"], k=10
-    ).collect()))
-    b = sorted(map(tuple, layout.knn_budget(
-        store, t["queries"], t["query_roles"], opt["routing"], opt["assignment"], k=10,
-        impl="numpy",
-    ).collect()))
-    assert a == b and len(a) > 0

@@ -46,11 +46,14 @@ def test_rank_shuffle_carries_no_vectors(t):
     1. a *Partial* WindowGroupLimit sits below the exchange (each map task
        ships ≤ k rows per query, not its whole scan);
     2. the exchange's input is a 4-column projection (ids + computed
-       distance) — the embedding arrays are projected away pre-shuffle.
+       distance) — the embedding arrays are projected away pre-shuffle:
+       the rounded distance expression in ground_truth's plan, the
+       kernel's (ids, distance) output with its NaN restore in the
+       strategies'.
     """
     import re
 
-    for fn in (knn.knn_prefilter, knn.knn_rls, knn.knn_comb_role_partition):
+    for fn in (knn.ground_truth, knn.knn_prefilter, knn.knn_rls, knn.knn_comb_role_partition):
         df = fn(t["documentblocks"], t["queries"], t["query_roles"], t["permission_assignment"], k=10)
         p = _plan(df)
         assert "WindowGroupLimit" in p and "Partial" in p, "rank-limit pushdown missing"
@@ -58,7 +61,7 @@ def test_rank_shuffle_carries_no_vectors(t):
         assert ex != -1
         below = p[ex:]
         assert re.search(
-            r"Project \[query_id#\d+L?, block_id#\d+L?, document_id#\d+L?, round", below
+            r"Project \[query_id#\d+L?, block_id#\d+L?, document_id#\d+L?, (round|coalesce)\(", below
         ), "exchange input must be the pruned (ids, distance) projection"
 
 
@@ -589,7 +592,7 @@ def test_mask_join_broadcast_gate_both_regimes(t, monkeypatch):
     def plan():
         return _plan(knn.knn_prefilter(
             t["documentblocks"], t["queries"], t["query_roles"],
-            t["permission_assignment"], k=10, impl="numpy",
+            t["permission_assignment"], k=10,
         ))
 
     with _with_auto_broadcast_off(spark):
@@ -667,8 +670,8 @@ def test_bm25_permitted_and_incremental_batch_gates(spark, sf_dir, monkeypatch):
 def test_permitted_relation_gates_both_regimes(t, monkeypatch):
     """r12 (VERDICT r11 item 1): the remaining hard hints on the
     role-expanded permitted relation are size-gated — the qd-tree leaf
-    pruning semi-join (numpy path), the expr path's per-block qdocs semi,
-    qdtree_leaf_fracs' routing join, and the mask build's permission hint.
+    pruning semi-join, qdtree_leaf_fracs' routing join, and the mask
+    build's permission hint.
     Under the limit the plans keep their broadcasts (bench scale is
     unchanged); above it the doc-keyed joins fall back to shuffle joins on
     document_id and the rows are identical."""
@@ -682,10 +685,9 @@ def test_permitted_relation_gates_both_regimes(t, monkeypatch):
     args = (assigned, t["queries"], t["query_roles"], t["permission_assignment"])
     frac_args = (assigned, t["queries"], t["query_roles"], t["permission_assignment"])
     with _with_auto_broadcast_off(spark):
-        on_numpy = knn.knn_qdtree(*args, k=10, impl="numpy")
-        assert "BroadcastHashJoin" in _plan(on_numpy)
-        rows_on = {tuple(r) for r in on_numpy.collect()}
-        expr_on = {tuple(r) for r in knn.knn_qdtree(*args, k=10, impl="expr").collect()}
+        on_qdtree = knn.knn_qdtree(*args, k=10)
+        assert "BroadcastHashJoin" in _plan(on_qdtree)
+        rows_on = {tuple(r) for r in on_qdtree.collect()}
         fracs_on = {tuple(r) for r in qdtree_leaf_fracs(*frac_args).collect()}
         masks_on = {
             (r["document_id"], tuple(r["qmask"]))
@@ -695,17 +697,12 @@ def test_permitted_relation_gates_both_regimes(t, monkeypatch):
         }
 
         monkeypatch.setattr(hints, "BROADCAST_LIMIT_BYTES", 0)
-        off_numpy = knn.knn_qdtree(*args, k=10, impl="numpy")
-        p = _plan(off_numpy)
+        off_qdtree = knn.knn_qdtree(*args, k=10)
+        p = _plan(off_qdtree)
         assert ("SortMergeJoin" in p) or ("ShuffledHashJoin" in p), (
             "gated-off leaf pruning must shuffle on document_id"
         )
-        assert rows_on == {tuple(r) for r in off_numpy.collect()}
-
-        off_expr = knn.knn_qdtree(*args, k=10, impl="expr")
-        p = _plan(off_expr)
-        assert ("SortMergeJoin" in p) or ("ShuffledHashJoin" in p)
-        assert expr_on == {tuple(r) for r in off_expr.collect()}
+        assert rows_on == {tuple(r) for r in off_qdtree.collect()}
 
         off_fracs = qdtree_leaf_fracs(*frac_args)
         p = _plan(off_fracs)
@@ -823,10 +820,9 @@ def test_mask_build_single_doc_exchange(spark):
 
 def test_qdtree_masked_path_has_no_per_query_routing_exchange(t, sf_dir):
     """r11: the masked qd-tree path derives live leaves from one corpus
-    pass + a broadcast semi-join; the per-(query_id, partition_id) routing
-    distinct belongs only to the expression path. Its exchange must not
-    appear in the masked plan — and must still appear in the expr plan,
-    which genuinely routes per query."""
+    pass + a broadcast semi-join; the Q-bit mask already carries the
+    per-query visibility, so no per-(query_id, partition_id) routing
+    distinct — and no exchange on that key — may appear in the plan."""
     from vectorsearch_rbac_spark.operators import partitioning
 
     assigned = partitioning.qdtree_assignment(
@@ -838,7 +834,5 @@ def test_qdtree_masked_path_has_no_per_query_routing_exchange(t, sf_dir):
     def _norm(plan: str) -> str:
         return re.sub(r"#\d+L?", "", plan)
 
-    p_masked = _norm(_plan(knn.knn_qdtree(*args, k=10, impl="numpy")))
+    p_masked = _norm(_plan(knn.knn_qdtree(*args, k=10)))
     assert "hashpartitioning(query_id, partition_id" not in p_masked, p_masked
-    p_expr = _norm(_plan(knn.knn_qdtree(*args, k=10, impl="expr")))
-    assert "hashpartitioning(query_id, partition_id" in p_expr, p_expr

@@ -5,6 +5,9 @@ would be compared against the same SQL at different times); this can.
 
 Usage: python tools/determinism_check.py [sf_dir]
 Prints FLAKY <name> for any entry whose two runs differ; exits 1 if any.
+Each line carries the entry's row fingerprint (``fp=``), so the output of
+two checkouts can be diffed to show that a change left every result as it
+was.
 """
 
 from __future__ import annotations
@@ -20,13 +23,20 @@ import __spark_entry__ as entry
 from vectorsearch_rbac_spark.sources import get_spark
 
 
+_MOD = 1 << 61  # the row-hash sum is taken mod 2^61
+
+
 def _fingerprint(df):
+    """(row count, multiset hash): the SUM of 60-bit md5 row hashes mod
+    2^61. A sum keeps every copy of a row — an XOR fold cancels
+    identical pairs, so a result that gained or lost a duplicate pair
+    would fingerprint unchanged. The decimal sum cannot overflow."""
     cols = sorted(df.columns)
     h = F.md5(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in cols]))
-    r = df.select(F.conv(F.substring(h, 1, 15), 16, 10).cast("long").alias("h")).agg(
-        F.count(F.lit(1)), F.expr("bit_xor(h)")
+    r = df.select(F.conv(F.substring(h, 1, 15), 16, 10).cast("decimal(38,0)").alias("h")).agg(
+        F.count(F.lit(1)), F.sum("h")
     ).first()
-    return (r[0], r[1])
+    return (r[0], int(r[1] or 0) % _MOD)
 
 
 def main() -> int:
@@ -45,7 +55,7 @@ def main() -> int:
         status = "ok" if a == b else "FLAKY"
         if a != b:
             flaky.append(name)
-        print(f"{status} {name} rows={a[0]}")
+        print(f"{status} {name} rows={a[0]} fp={a[1]:016x}")
     print(f"== {'ALL DETERMINISTIC' if not flaky else 'FLAKY: ' + ','.join(flaky)}")
     return 1 if flaky else 0
 

@@ -108,10 +108,6 @@ def vector_mul(a: ColumnOrName, b: ColumnOrName) -> Column:
     return _dzip(a, b, lambda x, y: x * y)
 
 
-def vector_scale(a: ColumnOrName, s) -> Column:
-    return F.transform(_c(a), lambda x: x.cast("double") * F.lit(s))
-
-
 def l2_normalize(a: ColumnOrName) -> Column:
     """pgvector ``l2_normalize``; safe on zero vectors (returns zeros)."""
     n = vector_norm(a)

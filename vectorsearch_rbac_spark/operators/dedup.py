@@ -133,8 +133,8 @@ def minhash_signatures_wide(shingles: DataFrame, num_hashes: int = 16) -> DataFr
 
 def lsh_bands_wide(wide: DataFrame, num_hashes: int = 16, band_size: int = 4) -> DataFrame:
     """(doc_id, band, band_sig) computed purely column-wise from the wide
-    signature row — md5-fold of each band's minhashes in h-order, identical
-    values to ``lsh_band_buckets`` but with zero additional shuffles."""
+    signature row — md5-fold of each band's minhashes in h-order, with zero
+    additional shuffles."""
     n_bands = num_hashes // band_size
     bands = F.array(*[
         F.struct(
@@ -147,35 +147,6 @@ def lsh_bands_wide(wide: DataFrame, num_hashes: int = 16, band_size: int = 4) ->
     ])
     return wide.select("doc_id", F.explode(bands).alias("p")).select(
         "doc_id", F.col("p.band").alias("band"), F.col("p.band_sig").alias("band_sig")
-    )
-
-
-def minhash_signatures(shingles: DataFrame, num_hashes: int = 16) -> DataFrame:
-    """(doc_id, h, minhash): min over shingles of a universal hash family
-    seeded by ONE md5 per shingle.
-
-    Shape matters at corpus scale: instead of exploding ×H rows per shingle
-    and shuffling (doc, h) pairs, the H hash values are H *columns* of one
-    row and the signature is ONE groupBy(doc_id) with H min() aggregates —
-    map-side partial combine reduces every scan partition to one H-wide row
-    per doc before the (single) shuffle. The long format this returns is
-    unpivoted from the wide aggregate with zero extra shuffles.
-    """
-    wide = minhash_signatures_wide(shingles, num_hashes)
-    pairs = F.array(*[
-        F.struct(F.lit(h).alias("h"), F.col(f"mh{h}").alias("minhash")) for h in range(num_hashes)
-    ])
-    return wide.select("doc_id", F.explode(pairs).alias("p")).select(
-        "doc_id", F.col("p.h").alias("h"), F.col("p.minhash").alias("minhash")
-    )
-
-
-def lsh_band_buckets(signatures: DataFrame, band_size: int = 4) -> DataFrame:
-    """(doc_id, band, band_sig): md5-fold the band's minhashes in h-order."""
-    banded = signatures.withColumn("band", (F.col("h") / band_size).cast("int"))
-    ordered = F.array_sort(F.collect_list(F.struct("h", "minhash")))
-    return banded.groupBy("doc_id", "band").agg(
-        md5_long(F.array_join(F.transform(ordered, lambda s: s["minhash"].cast("string")), ",")).alias("band_sig")
     )
 
 

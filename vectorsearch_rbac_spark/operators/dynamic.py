@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .knn import _METRICS, topk_per_query
+from .knn import _METRICS, _grouped_topk, topk_per_query
 
 
 def _doc_comb(permission_assignment: DataFrame) -> DataFrame:
@@ -588,19 +588,16 @@ def knn_role_routed(
     permission_assignment: DataFrame,
     k: int = 10,
     metric: str = "l2",
-    impl: str = "expr",
 ) -> DataFrame:
     """Search the role-churned store: each query scans only the partitions
     whose role set intersects its roles, applies the row-level permission
     check (multi-role partitions over-approximate), takes per-partition
     local top-k, dedups blocks reachable through several partitions (min
-    distance — the knn_role_partition merge idiom), and ranks globally.
-    Exact vs prefilter by construction: every permitted doc of every
-    query role lives in at least one routed partition (insert adds the
-    new role's docs to its routed partition; delete only removes docs no
-    remaining role of that partition needs)."""
-    from pyspark.sql import Window
-
+    distance — the knn_role_partition merge tail, ``knn._grouped_topk``),
+    and ranks globally. Exact vs prefilter by construction: every
+    permitted doc of every query role lives in at least one routed
+    partition (insert adds the new role's docs to its routed partition;
+    delete only removes docs no remaining role of that partition needs)."""
     routed = (
         F.broadcast(query_roles)
         .join(F.broadcast(partition_roles), "role_id")
@@ -617,29 +614,4 @@ def knn_role_routed(
         store.join(F.broadcast(routed), "partition_id")
         .join(qdocs.hint("SHUFFLE_HASH"), ["query_id", "document_id"], "left_semi")
     )
-    if impl == "numpy":
-        from .knn import _gather_local_topk
-
-        scored = _gather_local_topk(
-            visible, queries, k, metric, group_col="partition_id"
-        )
-    else:
-        dist = _METRICS[metric]
-        scored = (
-            visible
-            .join(F.broadcast(queries.select("query_id", "query_vector")), "query_id")
-            .select(
-                "query_id", "partition_id", "block_id", "document_id",
-                F.round(dist("vector", "query_vector"), 6).alias("distance"),
-            )
-        )
-    w_local = Window.partitionBy("query_id", "partition_id").orderBy(
-        F.col("distance").asc(), F.col("block_id").asc()
-    )
-    local = scored.withColumn("lr", F.row_number().over(w_local)).where(F.col("lr") <= k)
-    dedup = local.groupBy("query_id", "block_id", "document_id").agg(
-        F.min("distance").alias("distance")
-    )
-    return topk_per_query(dedup, k).select(
-        "query_id", "block_id", "document_id", "distance", "rank"
-    )
+    return _grouped_topk(visible, queries, k, metric, "partition_id")

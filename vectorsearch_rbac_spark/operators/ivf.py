@@ -67,29 +67,6 @@ def kmeans_fit(
     return C
 
 
-def kmeans_fit_mllib(
-    blocks: DataFrame,
-    nlists: int,
-    vec_col: str = "vector",
-    max_iter: int = 10,
-    seed: int = 42,
-) -> np.ndarray:
-    """Distributed k-means build via MLlib — the path for corpora too large
-    to sample meaningfully onto the driver (the full-data analogue of
-    :func:`kmeans_fit`; same output contract: an (nlists × dim) ndarray).
-
-    MLlib's KMeans runs as DataFrame jobs (k-means|| init + Lloyd
-    iterations), so the build itself scales with the cluster; only the
-    nlists×dim centroid matrix comes back to the driver.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = blocks.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
-    model = KMeans(k=nlists, maxIter=max_iter, seed=seed).fit(feats)
-    return np.array(model.clusterCenters(), dtype=np.float64)
-
-
 def assign_centroids(blocks: DataFrame, centroids: np.ndarray, vec_col: str = "vector") -> DataFrame:
     """Add ``centroid_id`` = argmin_j ||x - c_j|| as a codegen'd expression.
 

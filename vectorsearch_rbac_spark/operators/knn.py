@@ -9,14 +9,23 @@ The reference answers ONE ``(user, vector)`` query per SQL round-trip; the
 Spark-native form is **batch**: the query workload is itself a DataFrame and
 every strategy answers all queries in one distributed plan.
 
+Every strategy is a CANDIDATE step feeding one of two exact kernels:
+- ``local_topk`` scores each scan batch against the whole query matrix;
+  with a Q-bit permission mask (:func:`_query_doc_masks`) it is the
+  prefilter / rls / qd-tree kernel, unmasked it is postfilter's global
+  phase;
+- ``_gather_local_topk`` scores pre-joined (query, block) pairs; grouped by
+  role / partition it feeds the role-partition family's local window →
+  dedup → global merge (:func:`_grouped_topk`), ungrouped the comb-role
+  and budget-layout searches.
+Both reduce each scan partition to ≤ Q×k rows with Arrow-batched numpy in
+the expression folds' j-order, then a global window ranks the P×Q×k
+survivors. The expression plan exists once, as :func:`ground_truth` — the
+reference every strategy is pinned against and the DuckDB oracle replays.
+
 Scale design (100 TB blocks table, ~10³ queries):
 - queries + their role sets are broadcast (dim-sized);
-- permission tables are broadcast when small, else semi-joined on doc_id;
-- distance math is codegen'd column expressions (functions/vector.py);
-- top-k is two-phase: ``local_topk`` reduces each scan partition to ≤ Q×k
-  rows with Arrow-batched numpy (BLAS matmul), then a global window over
-  the P×Q×k survivors. The exact (window-only) variants exist for oracle
-  parity and small inputs.
+- permission tables are broadcast when small, else semi-joined on doc_id.
 """
 
 from __future__ import annotations
@@ -70,23 +79,76 @@ def _rel_est_bytes(rel: DataFrame, bytes_per_row: int) -> int:
     return int(n) * bytes_per_row
 
 
-def _permitted_blocks(blocks: DataFrame, query_roles: DataFrame, permission_assignment: DataFrame) -> DataFrame:
-    """query_id × permitted block rows.
-
-    Mirrors the reference prefilter CTE (common_function.py:112-121):
-    user roles → DISTINCT permitted docs → blocks. Both RBAC relations are
-    dim-sized → broadcast; the blocks fact table streams through.
-    """
-    qdocs = (
+def _query_docs(query_roles: DataFrame, permission_assignment: DataFrame) -> DataFrame:
+    """DISTINCT permitted (query_id, document_id) pairs: roles → docs. The
+    permission relation is docs×roles, so its hint is size-gated (r12)."""
+    return (
         F.broadcast(query_roles)
-        # gated (r12): perm is docs×roles, qdocs is Q×permitted-docs — both
-        # doc-cardinality; above the gate the blocks join shuffles on
-        # document_id (bucketable) instead of aborting on the 8 GB ceiling
         .join(hints.gated_broadcast(permission_assignment, _perm_est_bytes(permission_assignment)), "role_id")
         .select("query_id", "document_id")
         .distinct()
     )
-    return blocks.join(hints.gated_broadcast(qdocs, _rel_est_bytes(qdocs, 32)), "document_id")
+
+
+def _check_impl(value: str) -> None:
+    """Compatibility argument with one legal value, ``"numpy"``: the kernel
+    path is each strategy's only implementation; the expression plan lives
+    on once, as :func:`ground_truth`."""
+    if value != "numpy":
+        raise ValueError(
+            f"unknown search implementation {value!r}: only 'numpy' exists "
+            "(use ground_truth for the expression plan)"
+        )
+
+
+def _ranked(scored: DataFrame, k: int) -> DataFrame:
+    """Global top-k merge shared by every strategy: the output contract."""
+    return topk_per_query(scored, k).select("query_id", "block_id", "document_id", "distance", "rank")
+
+
+def _masked_topk(
+    blocks: DataFrame,
+    queries: DataFrame,
+    query_roles: DataFrame,
+    permission_assignment: DataFrame,
+    k: int,
+    metric: str,
+    doc_masks: DataFrame | None,
+) -> DataFrame:
+    """Exact top-k over ``blocks`` with the permission predicate run AS
+    DATA: a per-doc query-BITMASK column (Q bits ≈ Q/8 bytes,
+    :func:`_query_doc_masks`) joins the blocks scan ONCE, and the masked
+    ``local_topk`` kernel scores each batch against the whole query
+    matrix, excluding masked pairs from the per-batch cut — the scan
+    streams each vector exactly once instead of replicating the vector
+    payload per (query, permitted block). ``doc_masks`` accepts a PREBUILT
+    mask table (:func:`_query_doc_masks` output, checkpointed per
+    workload) — the build-once/search-many contract every other offline
+    index artifact here follows."""
+    masks = (
+        doc_masks if doc_masks is not None
+        else _query_doc_masks(queries, query_roles, permission_assignment)
+    )
+    scored = local_topk(
+        _join_masks(blocks, masks, queries, permission_assignment),
+        queries, k, metric, mask_col="qmask",
+    )
+    return _ranked(scored, k)
+
+
+def _grouped_topk(
+    routed: DataFrame, queries: DataFrame, k: int, metric: str, group_col: str
+) -> DataFrame:
+    """Per-(query, group) local top-k → dedup blocks reachable through
+    several groups (min distance) → global top-k: the merge tail of the
+    role-partition family. ``routed`` pairs each query with the rows of
+    every group it searches; the gather kernel pre-cuts per (query,
+    group) and batch, so the local window only sees survivors."""
+    scored = _gather_local_topk(routed, queries, k, metric, group_col=group_col)
+    w_local = Window.partitionBy("query_id", group_col).orderBy(F.col("distance").asc(), F.col("block_id").asc())
+    local = scored.withColumn("lr", F.row_number().over(w_local)).where(F.col("lr") <= k)
+    dedup = local.groupBy("query_id", "block_id", "document_id").agg(F.min("distance").alias("distance"))
+    return _ranked(dedup, k)
 
 
 def knn_prefilter(
@@ -96,7 +158,7 @@ def knn_prefilter(
     permission_assignment: DataFrame,
     k: int = 10,
     metric: str = "l2",
-    impl: str = "expr",
+    impl: str = "numpy",
     doc_masks: DataFrame | None = None,
 ) -> DataFrame:
     """Prefilter strategy: restrict to permitted blocks, then exact top-k.
@@ -105,40 +167,12 @@ def knn_prefilter(
     resolve accessible document_ids, then ``ORDER BY vector <-> q LIMIT k``
     over them. Recall = 1.0 by construction.
 
-    ``impl='numpy'`` runs the permission predicate AS DATA: a per-doc
-    query-BITMASK column (Q bits ≈ Q/8 bytes, :func:`_query_doc_masks`)
-    broadcast-joins the blocks scan ONCE, and the masked ``local_topk``
-    kernel scores each batch against the whole query matrix with the
-    expression folds' j-order, excluding masked pairs from the per-batch
-    cut — so the scan streams each vector exactly once instead of the
-    expr plan's per-(query, permitted-block) join that replicates the
-    vector payload per query. Same rows (pytest-pinned ≡ expr; the
-    sf0.01 oracle replays the expr form). ``doc_masks`` accepts a
-    PREBUILT mask table (:func:`_query_doc_masks` output, checkpointed
-    per workload) — the build-once/search-many contract every other
-    offline index artifact here follows.
+    The candidate step is the Q-bit permission mask (:func:`_masked_topk`),
+    so the scan streams each vector once. ``doc_masks`` accepts a
+    prebuilt mask table.
     """
-    if impl == "numpy":
-        masks = (
-            doc_masks if doc_masks is not None
-            else _query_doc_masks(queries, query_roles, permission_assignment)
-        )
-        scored = local_topk(
-            _join_masks(blocks, masks, queries, permission_assignment),
-            queries, k, metric, mask_col="qmask",
-        )
-    else:
-        dist = _METRICS[metric]
-        scored = (
-            _permitted_blocks(blocks, query_roles, permission_assignment)
-            .join(F.broadcast(queries.select("query_id", "query_vector")), "query_id")
-            .select(
-                "query_id", "block_id", "document_id",
-                F.round(dist("vector", "query_vector"), 6).alias("distance"),
-            )  # prune the vectors BEFORE the rank shuffle: the window exchange
-            # must move (id, distance) rows, never the embedding arrays
-        )
-    return topk_per_query(scored, k).select("query_id", "block_id", "document_id", "distance", "rank")
+    _check_impl(impl)
+    return _masked_topk(blocks, queries, query_roles, permission_assignment, k, metric, doc_masks)
 
 
 def knn_postfilter(
@@ -149,7 +183,7 @@ def knn_postfilter(
     k: int = 10,
     expansion: int = 4,
     metric: str = "l2",
-    impl: str = "expr",
+    impl: str = "numpy",
 ) -> DataFrame:
     """Postfilter strategy: global top-(k·expansion) ignoring permissions,
     then drop unpermitted rows, keep ≤ k.
@@ -159,42 +193,22 @@ def knn_postfilter(
     user's permitted blocks are sparse among global neighbors (the
     selectivity trade-off the reference benchmarks).
 
-    ``impl='numpy'`` runs the global phase two-phase (``local_topk``'s
-    Arrow/BLAS per-batch pre-cut — the hash-green ``rbac_layouts`` kernel),
-    so the unpermissioned scan emits P·Q·(k·expansion) rows instead of
-    N·Q; the permission join and final top-k are unchanged. All four
-    metrics route through the kernel (r10 — ``local_topk`` grew exact l1
-    and NaN-sorts-last cosine branches in r9, so the old l2/ip gate was
-    stale); pytest pins every metric ≡ expr.
+    The global phase is two-phase (``local_topk``'s Arrow/BLAS per-batch
+    pre-cut), so the unpermissioned scan emits P·Q·(k·expansion) rows
+    instead of N·Q; every metric routes through the kernel.
     """
-    if impl == "numpy":
-        global_topk = topk_per_query(
-            local_topk(blocks, queries, k * expansion, metric), k * expansion
-        ).drop("rank")
-    else:
-        dist = _METRICS[metric]
-        global_topk = topk_per_query(
-            blocks.join(F.broadcast(queries.select("query_id", "query_vector")), how="cross")
-            .select(
-                "query_id", "block_id", "document_id",
-                F.round(dist("vector", "query_vector"), 6).alias("distance"),
-            ),
-            k * expansion,
-        ).drop("rank")
+    _check_impl(impl)
+    global_topk = topk_per_query(
+        local_topk(blocks, queries, k * expansion, metric), k * expansion
+    ).drop("rank")
 
-    qdocs = (
-        F.broadcast(query_roles)
-        # gated (r12): doc-cardinality relations — same reasoning as
-        # _permitted_blocks; the probe side here is only Q·k·expansion
-        # rows, so above the gate Spark auto-broadcasts THAT side instead
-        .join(hints.gated_broadcast(permission_assignment, _perm_est_bytes(permission_assignment)), "role_id")
-        .select("query_id", "document_id")
-        .distinct()
-    )
+    # gated (r12): qdocs is doc-cardinality — the probe side here is only
+    # Q·k·expansion rows, so above the gate Spark auto-broadcasts THAT side
+    qdocs = _query_docs(query_roles, permission_assignment)
     filtered = global_topk.join(
         hints.gated_broadcast(qdocs, _rel_est_bytes(qdocs, 32)), ["query_id", "document_id"]
     )
-    return topk_per_query(filtered, k).select("query_id", "block_id", "document_id", "distance", "rank")
+    return _ranked(filtered, k)
 
 
 def knn_role_partition(
@@ -204,7 +218,6 @@ def knn_role_partition(
     permission_assignment: DataFrame,
     k: int = 10,
     metric: str = "l2",
-    impl: str = "expr",
 ) -> DataFrame:
     """Role-partition strategy: search each of the user's role partitions
     (blocks × permission on role_id), take per-partition top-k, dedup blocks
@@ -217,9 +230,8 @@ def knn_role_partition(
     ``partitioning.write_role_partitions`` (partitionBy(role_id) → partition
     pruning replaces per-table indexes).
 
-    ``impl='numpy'`` scores the SAME role-replicated rows through the
-    per-(query, role) gather-kernel pre-cut; the local window → dedup →
-    global merge is unchanged. pytest pins ≡ expr.
+    The role-replicated rows are scored through the per-(query, role)
+    gather-kernel pre-cut (:func:`_grouped_topk`).
     """
     # replicated per role; the perm hint is gated (r12): docs×roles — above
     # the gate this join shuffles on document_id (bucketable)
@@ -228,23 +240,7 @@ def knn_role_partition(
         "document_id",
     )
     routed = role_blocks.join(F.broadcast(query_roles), "role_id")
-    if impl == "numpy":
-        scored = _gather_local_topk(routed, queries, k, metric, group_col="role_id")
-    else:
-        dist = _METRICS[metric]
-        scored = (
-            routed
-            .join(F.broadcast(queries.select("query_id", "query_vector")), "query_id")
-            .select(
-                "query_id", "role_id", "block_id", "document_id",
-                F.round(dist("vector", "query_vector"), 6).alias("distance"),
-            )
-        )
-    # per-(query, role) local top-k bounds the merge input, then dedup + global
-    w_local = Window.partitionBy("query_id", "role_id").orderBy(F.col("distance").asc(), F.col("block_id").asc())
-    local = scored.withColumn("lr", F.row_number().over(w_local)).where(F.col("lr") <= k)
-    dedup = local.groupBy("query_id", "block_id", "document_id").agg(F.min("distance").alias("distance"))
-    return topk_per_query(dedup, k).select("query_id", "block_id", "document_id", "distance", "rank")
+    return _grouped_topk(routed, queries, k, metric, "role_id")
 
 
 def knn_role_partition_logical(
@@ -254,7 +250,6 @@ def knn_role_partition_logical(
     permission_assignment: DataFrame,
     k: int = 10,
     metric: str = "l2",
-    impl: str = "expr",
 ) -> DataFrame:
     """C3-LOGICAL: the reference's pointer-index variant
     (``logical_partition_benchmark/benchmark/src/pointer_hnsw_index.cpp``
@@ -288,20 +283,7 @@ def knn_role_partition_logical(
     fetched = routed.join(
         blocks.select("block_id", "vector").hint("SHUFFLE_HASH"), "block_id"
     )
-    if impl == "numpy":
-        scored = _gather_local_topk(fetched, queries, k, metric, group_col="role_id")
-    else:
-        dist = _METRICS[metric]
-        scored = fetched.join(
-            F.broadcast(queries.select("query_id", "query_vector")), "query_id"
-        ).select(
-            "query_id", "role_id", "block_id", "document_id",
-            F.round(dist("vector", "query_vector"), 6).alias("distance"),
-        )
-    w_local = Window.partitionBy("query_id", "role_id").orderBy(F.col("distance").asc(), F.col("block_id").asc())
-    local = scored.withColumn("lr", F.row_number().over(w_local)).where(F.col("lr") <= k)
-    dedup = local.groupBy("query_id", "block_id", "document_id").agg(F.min("distance").alias("distance"))
-    return topk_per_query(dedup, k).select("query_id", "block_id", "document_id", "distance", "rank")
+    return _grouped_topk(fetched, queries, k, metric, "role_id")
 
 
 def knn_comb_role_partition(
@@ -311,7 +293,7 @@ def knn_comb_role_partition(
     permission_assignment: DataFrame,
     k: int = 10,
     metric: str = "l2",
-    impl: str = "expr",
+    impl: str = "numpy",
 ) -> DataFrame:
     """Combination-role strategy: one partition per *distinct user role-set*
     (canonical sorted key); each partition holds every block that role-set
@@ -323,6 +305,7 @@ def knn_comb_role_partition(
     — the win is single-partition locality, which on disk maps to
     partitionBy(comb_role) and partition pruning.
     """
+    _check_impl(impl)
     comb = query_roles.groupBy("query_id").agg(
         F.array_join(F.array_sort(F.collect_list(F.col("role_id").cast("string"))), ",").alias("comb_role")
     )
@@ -339,19 +322,9 @@ def knn_comb_role_partition(
         .join(blocks, "document_id")
     )
     routed = part_blocks.join(F.broadcast(comb), "comb_role")
-    if impl == "numpy":
-        scored = _gather_local_topk(routed, queries, k, metric)
-    else:
-        dist = _METRICS[metric]
-        scored = (
-            routed
-            .join(F.broadcast(queries.select("query_id", "query_vector")), "query_id")
-            .select(
-                "query_id", "block_id", "document_id",
-                F.round(dist("vector", "query_vector"), 6).alias("distance"),
-            )
-        )
-    return topk_per_query(scored, k).select("query_id", "block_id", "document_id", "distance", "rank")
+    # one query ↔ one partition: the ungrouped gather kernel pre-cuts the
+    # (query, block) pairs, and no dedup is needed
+    return _ranked(_gather_local_topk(routed, queries, k, metric), k)
 
 
 def knn_rls(
@@ -361,7 +334,7 @@ def knn_rls(
     permission_assignment: DataFrame,
     k: int = 10,
     metric: str = "l2",
-    impl: str = "expr",
+    impl: str = "numpy",
     doc_masks: DataFrame | None = None,
 ) -> DataFrame:
     """Row-level-security semantics: the permission predicate is applied at
@@ -370,41 +343,16 @@ def knn_rls(
     Parity: ``controller/baseline/pg_row_security/row_level_security.py`` —
     Postgres RLS policy ``USING (document_id IN (SELECT …))``; in Spark the
     policy is a semi-join wrapper over the scan. RLS ≡ prefilter semantics
-    (the policy restricts the scan to permitted rows), so ``impl='numpy'``
-    rides the SAME predicate-as-data Q-bit mask kernel as
-    :func:`knn_prefilter`: the mask join IS the scan-level policy, applied
-    once per row instead of a per-(query, block) cross join that would
-    replicate the vector payload Q times — the 100×-scale shape. pytest
-    pins ≡ expr; the expr form remains the oracle-replayable plan.
+    (the policy restricts the scan to permitted rows), so this rides the
+    SAME predicate-as-data Q-bit mask kernel as :func:`knn_prefilter`: the
+    mask join IS the scan-level policy, applied once per row instead of a
+    per-(query, block) cross join that would replicate the vector payload
+    Q times — the 100×-scale shape.
     """
-    if impl == "numpy":
-        masks = (
-            doc_masks if doc_masks is not None
-            else _query_doc_masks(queries, query_roles, permission_assignment)
-        )
-        scored = local_topk(
-            _join_masks(blocks, masks, queries, permission_assignment),
-            queries, k, metric, mask_col="qmask",
-        )
-    else:
-        dist = _METRICS[metric]
-        qdocs = (
-            F.broadcast(query_roles)
-            # gated (r12): doc-cardinality — same reasoning as _permitted_blocks
-            .join(hints.gated_broadcast(permission_assignment, _perm_est_bytes(permission_assignment)), "role_id")
-            .select("query_id", "document_id")
-            .distinct()
-        )
-        # RLS = per-query filtered view of the scan; leftsemi keeps block rows
-        scored = (
-            blocks.join(F.broadcast(queries.select("query_id", "query_vector")), how="cross")
-            .join(hints.gated_broadcast(qdocs, _rel_est_bytes(qdocs, 32)), ["query_id", "document_id"], "leftsemi")
-            .select(
-                "query_id", "block_id", "document_id",
-                F.round(dist("vector", "query_vector"), 6).alias("distance"),
-            )
-        )
-    return topk_per_query(scored, k).select("query_id", "block_id", "document_id", "distance", "rank")
+    return knn_prefilter(
+        blocks, queries, query_roles, permission_assignment, k, metric,
+        impl=impl, doc_masks=doc_masks,
+    )
 
 
 def knn_qdtree(
@@ -414,7 +362,6 @@ def knn_qdtree(
     permission_assignment: DataFrame,
     k: int = 10,
     metric: str = "l2",
-    impl: str = "expr",
     doc_masks: DataFrame | None = None,
 ) -> DataFrame:
     """Qd-tree-partitioned search: route each query to the tree leaves that
@@ -428,75 +375,35 @@ def knn_qdtree(
     the routing join becomes Catalyst partition pruning. Exact (recall 1.0):
     routing only ever removes leaves with zero permitted docs.
 
-    ``impl='numpy'``: leaf pruning stays PARTITION-granular — a broadcast
-    semi-join keeps only leaves holding ≥1 permitted doc for ≥1 query (on
-    disk: partition pruning) — and the per-(query, block) check rides the
-    prefilter family's Q-bit mask kernel instead of an expression join
-    that replicates the vector payload per (query, permitted block). The
-    leaf-routing join already produces exactly the per-query visibility
-    the mask encodes, so rows are pytest-pinned ≡ expr.
+    Leaf pruning stays PARTITION-granular — a broadcast semi-join keeps
+    only leaves holding ≥1 permitted doc for ≥1 query (on disk: partition
+    pruning) — and the per-(query, block) check rides the prefilter
+    family's Q-bit mask kernel, which already encodes the per-query
+    visibility a per-query leaf routing table would.
     """
-    if impl == "numpy":
-        masks = (
-            doc_masks if doc_masks is not None
-            else _query_doc_masks(queries, query_roles, permission_assignment)
-        )
-        # live leaves = partitions holding ≥1 block of ≥1 permitted doc.
-        # r11 (guide §2.4): computed with ONE corpus pass + a broadcast
-        # semi-join + one tiny partition_id distinct, replacing the old
-        # qdocs-distinct → doc_parts-distinct → qparts-distinct chain
-        # (three Exchanges, one of them corpus-sized, to reach the same
-        # set — the per-QUERY routing table the chain built is only
-        # needed by the expression path below). Duplicates on the
-        # semi-join's build side are harmless by semi-join semantics.
-        # both layers gated (r12): the permission relation itself AND the
-        # role-expanded doc list derived from it are doc-cardinality — the
-        # r11 distinct-drop made permitted_docs strictly larger than the
-        # old qdocs build side (ADVICE r11). Above the gate the semi-join
-        # shuffles on document_id (bucketable, the ACORN fallback shape).
-        permitted_docs = (
-            F.broadcast(query_roles)
-            .join(hints.gated_broadcast(permission_assignment, _perm_est_bytes(permission_assignment)), "role_id")
-            .select("document_id")
-        )
-        live_leaves = (
-            assigned_blocks
-            .join(hints.gated_broadcast(permitted_docs, _rel_est_bytes(permitted_docs, 24)), "document_id", "leftsemi")
-            .select("partition_id")
-            .distinct()
-        )
-        scored = local_topk(
-            _join_masks(
-                assigned_blocks
-                .join(F.broadcast(live_leaves), "partition_id", "leftsemi"),  # leaf pruning
-                masks, queries, permission_assignment,
-            ),
-            queries, k, metric, mask_col="qmask",
-        )
-    else:
-        dist = _METRICS[metric]
-        qdocs = (
-            F.broadcast(query_roles)
-            # gated (r12): docs×roles relation — same reasoning as the
-            # masked path above; qdocs itself (Q × permitted docs) is also
-            # doc-cardinality, so its semi-join hint below is gated too
-            .join(hints.gated_broadcast(permission_assignment, _perm_est_bytes(permission_assignment)), "role_id")
-            .select("query_id", "document_id")
-            .distinct()
-        )
-        # per-QUERY leaf routing table: query → partitions with ≥1 permitted doc
-        doc_parts = assigned_blocks.select("document_id", "partition_id").distinct()
-        qparts = qdocs.join(doc_parts, "document_id").select("query_id", "partition_id").distinct()
-        scored = (
-            assigned_blocks.join(F.broadcast(qparts), "partition_id")  # leaf pruning
-            .join(hints.gated_broadcast(qdocs, _rel_est_bytes(qdocs, 32)), ["query_id", "document_id"], "leftsemi")  # per-block check
-            .join(F.broadcast(queries.select("query_id", "query_vector")), "query_id")
-            .select(
-                "query_id", "block_id", "document_id",
-                F.round(dist("vector", "query_vector"), 6).alias("distance"),
-            )
-        )
-    return topk_per_query(scored, k).select("query_id", "block_id", "document_id", "distance", "rank")
+    # live leaves = partitions holding ≥1 block of ≥1 permitted doc:
+    # ONE corpus pass + a broadcast semi-join + one tiny partition_id
+    # distinct. A per-query routing table would cost three Exchanges, one
+    # of them corpus-sized, and the mask already carries per-query
+    # visibility. Duplicates on the semi-join's build side are harmless
+    # by semi-join semantics.
+    # both layers gated (r12): the permission relation itself AND the
+    # role-expanded doc list derived from it are doc-cardinality. Above
+    # the gate the semi-join shuffles on document_id (bucketable, the
+    # ACORN fallback shape).
+    permitted_docs = (
+        F.broadcast(query_roles)
+        .join(hints.gated_broadcast(permission_assignment, _perm_est_bytes(permission_assignment)), "role_id")
+        .select("document_id")
+    )
+    live_leaves = (
+        assigned_blocks
+        .join(hints.gated_broadcast(permitted_docs, _rel_est_bytes(permitted_docs, 24)), "document_id", "leftsemi")
+        .select("partition_id")
+        .distinct()
+    )
+    pruned = assigned_blocks.join(F.broadcast(live_leaves), "partition_id", "leftsemi")  # leaf pruning
+    return _masked_topk(pruned, queries, query_roles, permission_assignment, k, metric, doc_masks)
 
 
 def local_topk(
@@ -526,7 +433,7 @@ def local_topk(
     kernel — the permission predicate travels as ~Q/8 bytes per row
     instead of a per-(query, block) join that replicates the vector
     payload Q times. Permitted NaN distances (cosine zero-norm) still
-    sort last-but-emitted, exactly as the expr plan ranks them.
+    sort last-but-emitted, exactly as :func:`ground_truth` ranks them.
 
     ``q_chunk`` caps the query-axis width of the per-batch distance
     matrix (rows × q_chunk float64); default auto-sizes to a ~32 MB
@@ -558,7 +465,7 @@ def local_topk(
     def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids_, Q_, qh_ = bc.value
         nq = len(qids_)
-        # j-order query-norm fold (the same sequential sum the expr runs);
+        # j-order query-norm fold (the same sequential sum the expression runs);
         # computed once over the full matrix, sliced per chunk — the fold
         # is elementwise per query so slicing cannot change any value
         qn2 = np.zeros(Q_.shape[0])
@@ -611,7 +518,7 @@ def local_topk(
                 Qc = Q_[q0:q0 + step]
                 nc = Qc.shape[0]
                 if metric == "l2":
-                    # per-dim j-order fold ≡ the expr's sequential (x−q)² sum
+                    # per-dim j-order fold ≡ the expression's sequential (x−q)² sum
                     # (vector.py's left-to-right _dsum contract)
                     d2 = np.zeros((n, nc))
                     for j in range(Q_.shape[1]):
@@ -694,7 +601,7 @@ def local_topk(
             yield pd.DataFrame(out)
 
     out = blocks.mapInPandas(part, schema=schema)
-    # pandas→Arrow masks NaN as null; restore the expr path's explicit NaN
+    # pandas→Arrow masks NaN as null; restore the expression's explicit NaN
     # (zero-norm cosine rows must sort LAST ascending, a null sorts first)
     return out.withColumn("distance", F.coalesce("distance", F.lit(float("nan"))))
 
@@ -762,7 +669,7 @@ def _query_doc_masks(
     data side of the prefilter kernel: Q bits ≈ Q/8 bytes per DOC, joined
     to the blocks scan once, instead of a per-(query, block) join that
     replicates the vector payload per query. Docs visible to no query are
-    absent (the expr path's inner join drops them too).
+    absent (ground_truth's inner join drops them too).
 
     Built in expressions over one dim-sized collect: roles → permitted
     (query, doc) pairs → per-doc sorted-position set → packed 64-bit
@@ -797,7 +704,7 @@ def _query_doc_masks(
     # partial (map-side) set-merge dedupes before the shuffle, and the
     # set's nondeterministic element order cannot reach the output because
     # bitwiseOR is commutative. Mask values are pytest-pinned unchanged
-    # (test_properties round-trip + ≡-expr parity).
+    # (test_properties round-trip + ≡-ground_truth parity).
     lists = qdocs.groupBy("document_id").agg(F.collect_set("qpos").alias("ps"))
     return lists.select(
         "document_id",
@@ -839,14 +746,14 @@ def _gather_local_topk(
     query_id, computes row-wise distances vectorized, rounds half-up 6 dp
     (``F.round`` parity), and emits only its per-(query) top-k under the
     (distance, block_id) order the stage-2 window applies. Rows whose
-    query_id is absent from ``queries`` are dropped — the expr path's
+    query_id is absent from ``queries`` are dropped — ground_truth's
     inner join does the same.
 
     ``group_col`` (role_id / partition_id / comb_role) switches the cut to
     per-(query, group) top-k and carries the column through — the shape
     the role-partition family's LOCAL window needs: each batch emits a
     superset of every (query, group) local top-k, so the downstream
-    window → dedup → global merge is row-identical to the expr plan."""
+    window → dedup → global merge is row-identical to :func:`ground_truth`."""
     import numpy as np
 
     q_rows = queries.select("query_id", "query_vector").collect()
@@ -947,7 +854,7 @@ def _gather_local_topk(
 
     cols = ["query_id", b_id, d_id] + ([group_col] if group_col else [])
     out = joined.select(*cols, vec_col).mapInPandas(part, schema=schema)
-    # pandas→Arrow masks NaN as null; restore the expr path's explicit NaN
+    # pandas→Arrow masks NaN as null; restore the expression's explicit NaN
     # (cosine zero-norm rows must sort LAST ascending, a null sorts first)
     return out.withColumn("distance", F.coalesce("distance", F.lit(float("nan"))))
 
@@ -961,9 +868,21 @@ def knn_topk_fast(
     """Two-phase exact batch KNN (no RBAC filter): numpy local top-k then
     global window merge. Same results as the window-only plan, hot path for
     bench + ground truth at scale."""
-    return topk_per_query(local_topk(blocks, queries, k, metric), k).select(
-        "query_id", "block_id", "document_id", "distance", "rank"
-    )
+    return _ranked(local_topk(blocks, queries, k, metric), k)
+
+
+def _permitted_blocks(blocks: DataFrame, query_roles: DataFrame, permission_assignment: DataFrame) -> DataFrame:
+    """query_id × permitted block rows.
+
+    Mirrors the reference prefilter CTE (common_function.py:112-121):
+    user roles → DISTINCT permitted docs → blocks. Both RBAC relations are
+    dim-sized → broadcast; the blocks fact table streams through.
+    """
+    qdocs = _query_docs(query_roles, permission_assignment)
+    # gated (r12): qdocs is Q×permitted-docs — above the gate the blocks
+    # join shuffles on document_id (bucketable) instead of aborting on the
+    # 8 GB ceiling
+    return blocks.join(hints.gated_broadcast(qdocs, _rel_est_bytes(qdocs, 32)), "document_id")
 
 
 def ground_truth(
@@ -975,8 +894,27 @@ def ground_truth(
     metric: str = "l2",
 ) -> DataFrame:
     """Exact permitted top-k = the reference's ground truth
-    (``compute_ground_truth.py``, ``_ground_truth_func_postgres``)."""
-    return knn_prefilter(blocks, queries, query_roles, permission_assignment, k, metric)
+    (``compute_ground_truth.py``, ``_ground_truth_func_postgres``).
+
+    The one EXPRESSION-PLAN reference: permitted (query, block) pairs from
+    :func:`_permitted_blocks`, codegen'd distance folds (functions/vector.py),
+    ``F.round`` to 6 dp and the (distance, block_id) window rank — the plan
+    the DuckDB oracle SQL replays clause for clause. Every exact strategy
+    above is pytest-pinned row-identical to it; it replicates the vector
+    payload per (query, permitted block), so it is a reference, not a
+    search path.
+    """
+    dist = _METRICS[metric]
+    scored = (
+        _permitted_blocks(blocks, query_roles, permission_assignment)
+        .join(F.broadcast(queries.select("query_id", "query_vector")), "query_id")
+        .select(
+            "query_id", "block_id", "document_id",
+            F.round(dist("vector", "query_vector"), 6).alias("distance"),
+        )  # prune the vectors BEFORE the rank shuffle: the window exchange
+        # must move (id, distance) rows, never the embedding arrays
+    )
+    return _ranked(scored, k)
 
 
 def recall_at_k(predicted: DataFrame, truth: DataFrame) -> DataFrame:

@@ -45,7 +45,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .knn import _METRICS, topk_per_query
+from .knn import _gather_local_topk, _ranked
 
 # bench-fitted {k, beta} recall and {a, b} cost parameters (operators/tuning.py
 # fits these from a one-pass recall/cost curve — parity: get_parameter.py /
@@ -497,7 +497,6 @@ def knn_budget(
     assignment: DataFrame,
     k: int = 10,
     metric: str = "l2",
-    impl: str = "expr",
 ) -> DataFrame:
     """Exact top-k over the optimized layout.
 
@@ -516,21 +515,7 @@ def knn_budget(
     (partition, atom) slices some query reads are materialized."""
     scan_plan = budget_scan_plan(query_roles, routing, assignment)
     routed = store.join(F.broadcast(scan_plan), ["partition_id", "atom_key"])
-    if impl == "numpy":
-        # the metadata-level scan plan already pairs each (query, block)
-        # exactly once — the gather kernel scores the pair rows with the
-        # expression folds' j-order and pre-cuts per batch (pinned ≡ expr)
-        from .knn import _gather_local_topk
-
-        scored = _gather_local_topk(routed, queries, k, metric)
-    else:
-        dist = _METRICS[metric]
-        scored = (
-            routed
-            .join(F.broadcast(queries.select("query_id", "query_vector")), "query_id")
-            .select(
-                "query_id", "block_id", "document_id",
-                F.round(dist("vector", "query_vector"), 6).alias("distance"),
-            )
-        )
-    return topk_per_query(scored, k).select("query_id", "block_id", "document_id", "distance", "rank")
+    # the metadata-level scan plan already pairs each (query, block)
+    # exactly once — the gather kernel scores the pair rows with the
+    # expression folds' j-order and pre-cuts per batch
+    return _ranked(_gather_local_topk(routed, queries, k, metric), k)

@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, BinaryType, FloatType, IntegerType
+from pyspark.sql.types import ArrayType, BinaryType, FloatType
 
 MB = 1024 * 1024
 
@@ -59,11 +59,6 @@ def fp16_unpack(b: pd.Series) -> pd.Series:
 def int8_pack(v: pd.Series) -> pd.Series:
     """array<smallint/int> of [-127,127] codes → 1 byte per component."""
     return v.map(lambda a: np.asarray(a, dtype=np.int8).tobytes())
-
-
-@pandas_udf(ArrayType(IntegerType()))
-def int8_unpack(b: pd.Series) -> pd.Series:
-    return b.map(lambda x: np.frombuffer(x, dtype=np.int8).astype(np.int32))
 
 
 def vector_logical_mb(df: DataFrame, vec_col: str = "embedding", component: str = "vector") -> float:
