@@ -125,7 +125,7 @@ def q_rbac_qdtree_topk(spark, sf_dir):
     # predicates x centroid splits; no query-workload dependence), so it
     # is cached per sf like the IVF/PQ models and the C7 truth — the
     # reference builds the tree offline too (qd_tree.py build phase)
-    assigned = _cached(("qdtree_assigned", sf_dir), lambda: partitioning.qdtree_assignment(
+    assigned = _cached(spark, ("qdtree_assigned", sf_dir), lambda: partitioning.qdtree_assignment(
         t["documentblocks"], t["permission_assignment"], max_leaf_size=64, max_depth=4
     ).localCheckpoint())
     out = knn.knn_qdtree(assigned, t["queries"], t["query_roles"], t["permission_assignment"], k=TOPK)
@@ -160,7 +160,7 @@ def q_rbac_layouts_topk(spark, sf_dir):
     # predicates x centroid splits; no query-workload dependence), so it
     # is cached per sf like the IVF/PQ models and the C7 truth — the
     # reference builds the tree offline too (qd_tree.py build phase)
-    assigned = _cached(("qdtree_assigned", sf_dir), lambda: partitioning.qdtree_assignment(
+    assigned = _cached(spark, ("qdtree_assigned", sf_dir), lambda: partitioning.qdtree_assignment(
         t["documentblocks"], t["permission_assignment"], max_leaf_size=64, max_depth=4
     ).localCheckpoint())
     blocks, pa, qs, qr = args[0], t["permission_assignment"], t["queries"], t["query_roles"]
@@ -309,10 +309,10 @@ def q_rbac_topk_fast(spark, sf_dir):
 
 
 def q_cosine_topk(spark, sf_dir):
-    # impl="numpy": the Arrow pair kernel with per-batch pre-cut, pinned
-    # row-identical to the expression brute force (test_knn.py)
+    # the shared exact scan kernel (knn.local_topk), pinned row-identical
+    # to knn.ground_truth's expression plan (test_knn.py)
     t = _rbac(spark, sf_dir)
-    out = ann.cosine_topk_bruteforce(t["embeddings"], t["queries"], k=TOPK, impl="numpy")
+    out = ann.cosine_topk_bruteforce(t["embeddings"], t["queries"], k=TOPK)
     return _i(out, "query_id", "vec_id", "rank")
 
 
@@ -334,16 +334,16 @@ def q_halfvec_topk(spark, sf_dir):
     emb = t["embeddings"].select("vec_id", V.fp16_quantize("embedding").alias("embedding"))
     qs = t["queries"].select("query_id", V.fp16_quantize("query_vector").alias("query_vector"))
     # quantization stays in the expression plan (the oracle's exact form);
-    # scoring rides the two-phase Arrow/BLAS kernel pinned ≡ expr
-    out = ann.l2_topk_bruteforce(emb, qs, k=TOPK, id_col="vec_id", impl="numpy")
+    # scoring rides the shared exact scan kernel, pinned ≡ ground_truth
+    out = ann.l2_topk_bruteforce(emb, qs, k=TOPK, id_col="vec_id")
     return _i(out, "query_id", "vec_id", "rank")
 
 
 def q_sparse_cosine_topk(spark, sf_dir):
     """Sparsevec cosine top-k over magnitude-sparsified embeddings."""
     t = _rbac(spark, sf_dir)
-    # impl="numpy": scatter-to-dense BLAS kernel pinned ≡ the sparse expr
-    out = ann.sparse_cosine_topk(t["embeddings"], t["queries"], k=TOPK, threshold=0.15, impl="numpy")
+    # the zero-filled thresholded vectors ride the shared exact scan kernel
+    out = ann.sparse_cosine_topk(t["embeddings"], t["queries"], k=TOPK, threshold=0.15)
     return _i(out, "query_id", "vec_id", "rank")
 
 
@@ -847,8 +847,8 @@ def q_int8_topk(spark, sf_dir):
     """Int8-quantized brute-force top-k: integer dot products → bit-exact
     oracle (E19)."""
     t = _rbac(spark, sf_dir)
-    # impl="numpy": one int64 matmul per Arrow batch — bit-exact, pinned
-    out = curation.int8_topk(t["embeddings"], t["queries"], k=TOPK, impl="numpy")
+    # the shared exact scan kernel with metric ip: integer dots, bit-exact
+    out = curation.int8_topk(t["embeddings"], t["queries"], k=TOPK)
     return _i(out, "query_id", "vec_id")
 
 
@@ -1713,57 +1713,53 @@ _STREAM_DROPS: dict[str, str] = {}
 # re-train returns bit-identical arrays — the cache only skips repeat
 # work, exactly the production shape (an index is built once and served
 # many times; bench's warm runs measure SEARCH throughput, not rebuilds).
+# Artifacts that are DataFrames belong to the SparkSession that built
+# them, so entries are keyed by the application id and an insert drops
+# every other application's entries: after spark.stop() and a new
+# session the cache rebuilds instead of serving a dead session's plans.
 _INDEX_CACHE: dict = {}
 
 
-def _cached(key, build):
-    out = _INDEX_CACHE.get(key)
+def _cached(spark, key, build):
+    app = spark.sparkContext.applicationId
+    out = _INDEX_CACHE.get((app, key))
     if out is None:
-        out = _INDEX_CACHE[key] = build()
+        for stale in [k for k in _INDEX_CACHE if k[0] != app]:
+            del _INDEX_CACHE[stale]
+        out = _INDEX_CACHE[(app, key)] = build()
     return out
 
 
-def _truth_blocks(sf_dir, t):
+def _truth_blocks(spark, sf_dir, t):
     """Exact L2 ground truth over documentblocks — shared by every recall
     entry that scores against the raw block table. Deterministic, so it's
     computed once per sf and checkpointed (the reference precomputes
     ground truth offline too — C7 compute_groundtruth); the APPROXIMATE
     path under test still runs in full every call."""
     return _cached(
-        ("truth_blocks", sf_dir),
+        spark, ("truth_blocks", sf_dir),
         lambda: knn.knn_topk_fast(t["documentblocks"], t["queries"], k=TOPK).localCheckpoint(),
     )
 
 
-def _truth_emb(sf_dir, t):
+def _truth_emb(spark, sf_dir, t):
     """Exact L2 ground truth over the embeddings table (pq/ivfpq share
-    it). Scored through the Arrow pair kernel pinned row-identical to
-    the expression fold (tuning._pair_scores — offline truths take the
-    throughput path, certified members keep the expression scan)."""
-    def build():
-        from vectorsearch_rbac_spark.operators import tuning
-
-        scored = tuning._pair_scores(t["embeddings"], t["queries"], "numpy").select(
-            "query_id", F.col("vec_id").alias("block_id"), "distance"
-        )
-        return knn.topk_per_query(scored, TOPK).select(
-            "query_id", "block_id", "distance", "rank"
-        ).localCheckpoint()
-
-    return _cached(("truth_emb", sf_dir), build)
+    it): the shared exact scan kernel (ann.l2_topk_bruteforce), which
+    keeps Q×k rows per scan batch instead of ranking all N·Q pairs."""
+    return _cached(
+        spark, ("truth_emb", sf_dir),
+        lambda: ann.l2_topk_bruteforce(t["embeddings"], t["queries"], k=TOPK)
+        .withColumnRenamed("vec_id", "block_id")
+        .localCheckpoint(),
+    )
 
 
-def _truth_emb_cos(sf_dir, t):
+def _truth_emb_cos(spark, sf_dir, t):
     """Exact COSINE ground truth over the embeddings table (lsh shares
     it); same offline-precompute rationale as _truth_emb."""
     return _cached(
-        ("truth_emb_cos", sf_dir),
-        # impl="numpy": the Arrow kernel pinned row-identical to the expr
-        # path builds the offline truth ~10× faster at sf1; the certified
-        # global_topk member keeps the expression scan
-        lambda: ann.cosine_topk_bruteforce(
-            t["embeddings"], t["queries"], k=TOPK, impl="numpy"
-        )
+        spark, ("truth_emb_cos", sf_dir),
+        lambda: ann.cosine_topk_bruteforce(t["embeddings"], t["queries"], k=TOPK)
         .withColumnRenamed("vec_id", "block_id")
         .localCheckpoint(),
     )
@@ -1985,15 +1981,15 @@ def q_ivf_recall(spark, sf_dir):
     # fraction for recall; like pgvector's ivfflat.probes, the knob trades
     # scanned lists for recall
     nlists = max(4, min(16, blocks.count() // 125))
-    C = _cached(("ivf_C", sf_dir), lambda: ivf.kmeans_fit(blocks, nlists=nlists, max_iter=8))
+    C = _cached(spark, ("ivf_C", sf_dir), lambda: ivf.kmeans_fit(blocks, nlists=nlists, max_iter=8))
     # the assigned index is an offline build artifact like the centroids
     # themselves (the reference's CREATE INDEX): built once per sf, served
     # per search — the SEARCH under test runs in full every call
     indexed = _cached(
-        ("ivf_indexed", sf_dir), lambda: ivf.assign_centroids(blocks, C).localCheckpoint()
+        spark, ("ivf_indexed", sf_dir), lambda: ivf.assign_centroids(blocks, C).localCheckpoint()
     )
     pred = ivf.ivf_search(indexed, t["queries"], C, k=TOPK, nprobe=max(2, (5 * nlists) // 8))
-    truth = _truth_blocks(sf_dir, t)
+    truth = _truth_blocks(spark, sf_dir, t)
     return knn.recall_at_k(pred, truth)
 
 
@@ -2006,13 +2002,13 @@ def q_pq_recall(spark, sf_dir):
 
     t = _rbac(spark, sf_dir)
     emb, qs = t["embeddings"], t["queries"]
-    truth = _truth_emb(sf_dir, t)
+    truth = _truth_emb(spark, sf_dir, t)
     # ksub=64 codebooks + expansion=8 refine: recall ~0.945 at sf0.1
     # (0.74 at ksub=16/exp=4); ksub widens the LUT (build-time cost), the
     # ADC scan stays m bytes/vector either way. ksub is clamped to corpus
     # size so tiny sf dirs still train.
     B = _cached(
-        ("pq_B", sf_dir), lambda: pq.pq_train(emb, m=16, ksub=max(8, min(64, emb.count() // 8)))
+        spark, ("pq_B", sf_dir), lambda: pq.pq_train(emb, m=16, ksub=max(8, min(64, emb.count() // 8)))
     )
     codes = pq.pq_encode(emb, B)
     # impl="numpy": Arrow ADC kernel for the recall member (ivf/lsh
@@ -2037,10 +2033,10 @@ def q_ivfpq_recall(spark, sf_dir):
     emb, qs = t["embeddings"], t["queries"]
     nlists = max(4, min(16, emb.count() // 125))
     C = _cached(
-        ("ivfpq_C", sf_dir), lambda: ivf.kmeans_fit(emb, nlists=nlists, vec_col="embedding", max_iter=8)
+        spark, ("ivfpq_C", sf_dir), lambda: ivf.kmeans_fit(emb, nlists=nlists, vec_col="embedding", max_iter=8)
     )
     B = _cached(
-        ("ivfpq_B", sf_dir),
+        spark, ("ivfpq_B", sf_dir),
         lambda: pq.ivfpq_train(emb, C, m=16, ksub=max(8, min(64, emb.count() // 8))),
     )
     codes = pq.ivfpq_encode(emb, C, B)
@@ -2051,7 +2047,7 @@ def q_ivfpq_recall(spark, sf_dir):
         impl="numpy",
     ).withColumnRenamed("vec_id", "block_id")
     # exact truth over the same metric/table as pq_recall (shared + cached)
-    truth = _truth_emb(sf_dir, t)
+    truth = _truth_emb(spark, sf_dir, t)
     return knn.recall_at_k(pred, truth)
 
 
@@ -2076,7 +2072,7 @@ def q_lsh_recall(spark, sf_dir):
         t["embeddings"], t["queries"], k=TOPK, n_planes=n_planes, n_tables=8,
         impl="numpy",
     )
-    truth = _truth_emb_cos(sf_dir, t)
+    truth = _truth_emb_cos(spark, sf_dir, t)
     return knn.recall_at_k(
         pred.withColumnRenamed("vec_id", "block_id"), truth
     )
@@ -2096,7 +2092,7 @@ def q_graph_recall(spark, sf_dir):
 
     t = _rbac(spark, sf_dir)
     g = _cached(
-        ("nsw_graph", sf_dir),
+        spark, ("nsw_graph", sf_dir),
         lambda: graph_ann.build_nsw_graph(
             t["documentblocks"], m=8
         ).localCheckpoint(),
@@ -2107,7 +2103,7 @@ def q_graph_recall(spark, sf_dir):
         # would be a cache-key bug, so fail loudly instead of rebuilding
         stale="error",
     )
-    truth = _truth_blocks(sf_dir, t)
+    truth = _truth_blocks(spark, sf_dir, t)
     return knn.recall_at_k(pred, truth)
 
 
@@ -2127,7 +2123,7 @@ def q_graph_postfilter_recall(spark, sf_dir):
 
     t = _rbac(spark, sf_dir)
     g = _cached(
-        ("nsw_graph", sf_dir),
+        spark, ("nsw_graph", sf_dir),
         lambda: graph_ann.build_nsw_graph(
             t["documentblocks"], m=8
         ).localCheckpoint(),
@@ -2150,7 +2146,7 @@ def q_graph_postfilter_recall(spark, sf_dir):
         TOPK,
     )
     truth = _cached(
-        ("truth_postfilter", sf_dir),
+        spark, ("truth_postfilter", sf_dir),
         lambda: q_rbac_postfilter_topk(spark, sf_dir).localCheckpoint(),
     )
     return knn.recall_at_k(pred, truth)
@@ -2170,7 +2166,7 @@ def q_acorn_recall(spark, sf_dir):
 
     t = _rbac(spark, sf_dir)
     g = _cached(
-        ("acorn_graph_g1", sf_dir),
+        spark, ("acorn_graph_g1", sf_dir),
         lambda: graph_ann.build_acorn_graph(
             t["documentblocks"], m=8, gamma=1
         ).localCheckpoint(),
@@ -2181,7 +2177,7 @@ def q_acorn_recall(spark, sf_dir):
         permissions=t["permission_assignment"],  # predicate supplied AS DATA
         stale="error",  # cached per sf over this exact corpus — fail loudly
     )
-    truth = _cached(("truth_prefilter", sf_dir),
+    truth = _cached(spark, ("truth_prefilter", sf_dir),
                     lambda: q_rbac_prefilter_topk(spark, sf_dir).localCheckpoint())
     return knn.recall_at_k(pred, truth)
 
@@ -2237,14 +2233,14 @@ def q_acorn_gamma_recall(spark, sf_dir):
         ).localCheckpoint()
         return gamma, g
 
-    gamma, g = _cached(("acorn_graph_gamma", sf_dir), build)
+    gamma, g = _cached(spark, ("acorn_graph_gamma", sf_dir), build)
     pred = graph_ann.acorn_search_indexed(
         t["documentblocks"], g, t["queries"], t["query_roles"], k=TOPK, m=8,
         ef=96, gamma=gamma,
         permissions=t["permission_assignment"],  # predicate supplied AS DATA
         stale="error",  # cached per sf over this exact corpus — fail loudly
     )
-    truth = _cached(("truth_prefilter", sf_dir),
+    truth = _cached(spark, ("truth_prefilter", sf_dir),
                     lambda: q_rbac_prefilter_topk(spark, sf_dir).localCheckpoint())
     return knn.recall_at_k(pred, truth)
 
@@ -2265,13 +2261,13 @@ def q_rbac_graph_recall(spark, sf_dir):
 
     t = _rbac(spark, sf_dir)
     store = _cached(
-        ("dyn_store", sf_dir),
+        spark, ("dyn_store", sf_dir),
         lambda: dynamic.build_store(
             t["documentblocks"], t["permission_assignment"]
         ).localCheckpoint(),
     )
     g = _cached(
-        ("dyn_graphs", sf_dir),
+        spark, ("dyn_graphs", sf_dir),
         lambda: graph_ann.build_nsw_graph(
             store, m=8, id_col="block_id", vec_col="vector", part_col="comb_role"
         ).localCheckpoint(),
@@ -2280,7 +2276,7 @@ def q_rbac_graph_recall(spark, sf_dir):
         store, t["queries"], t["query_roles"], k=TOPK, m=8, ef=48, adjacency=g
     )
     truth = _cached(
-        ("dyn_truth", sf_dir),
+        spark, ("dyn_truth", sf_dir),
         lambda: dynamic.knn_dynamic(
             store, t["queries"], t["query_roles"], k=TOPK
         ).localCheckpoint(),
@@ -2335,11 +2331,11 @@ def q_ivf_tuning_curve(spark, sf_dir):
     t = _rbac(spark, sf_dir)
     blocks = t["documentblocks"]
     nlists = max(4, min(16, blocks.count() // 125))
-    C = _cached(("ivf_C", sf_dir), lambda: ivf.kmeans_fit(blocks, nlists=nlists, max_iter=8))
+    C = _cached(spark, ("ivf_C", sf_dir), lambda: ivf.kmeans_fit(blocks, nlists=nlists, max_iter=8))
     indexed = _cached(
-        ("ivf_indexed", sf_dir), lambda: ivf.assign_centroids(blocks, C).localCheckpoint()
+        spark, ("ivf_indexed", sf_dir), lambda: ivf.assign_centroids(blocks, C).localCheckpoint()
     )
-    truth = _truth_blocks(sf_dir, t)
+    truth = _truth_blocks(spark, sf_dir, t)
     curve = tuning.recall_cost_curve(indexed, t["queries"], C, truth, k=TOPK)
     return _i(curve, "nprobe")
 
@@ -2372,7 +2368,7 @@ def q_rbac_dynamic_budget_topk(spark, sf_dir):
     # CBO over collected dim-sized stats — the reference runs its layout
     # optimization offline too); cache it per sf like the IVF/PQ models.
     # Store build + routed search still run per call.
-    opt = _cached(("budget_opt", sf_dir), _optimize)
+    opt = _cached(spark, ("budget_opt", sf_dir), _optimize)
     store = layout.build_budget_store(t["documentblocks"], t["permission_assignment"], opt["assignment"])
     out = layout.knn_budget(store, t["queries"], t["query_roles"], opt["routing"], opt["assignment"], k=TOPK)
     return _i(out, "query_id", "block_id", "document_id", "rank")
@@ -2392,18 +2388,14 @@ def q_tuning_curve(spark, sf_dir):
     # reference precomputes it offline); the curve measurement itself
     # runs in full every call
     truth = _cached(
-        ("anchor_ivf_truth", sf_dir, TOPK),  # k in the key: a truth built
+        spark, ("anchor_ivf_truth", sf_dir, TOPK),  # k in the key: a truth built
         # at a different depth would silently inflate the recall curve
-        lambda: tuning.anchor_ivf_truth(
-            t["embeddings"], t["queries"], k=TOPK, impl="numpy"
-        ).localCheckpoint(),
+        lambda: tuning.anchor_ivf_truth(t["embeddings"], t["queries"], k=TOPK).localCheckpoint(),
     )
-    # impl="numpy": the Q·N scoring pass rides the Arrow kernel pinned
-    # row-identical to the expression fold (pq/lsh kernel precedent);
-    # the curve stays hash-green because the emitted values are the same
+    # the Q·N scoring pass rides the Arrow pair kernel, whose j-order fold
+    # and half-up round the oracle's expression replays value for value
     out = tuning.anchor_ivf_curve(
-        t["embeddings"], t["queries"], nlists=8, anchor_stride=37, k=TOPK,
-        truth=truth, impl="numpy",
+        t["embeddings"], t["queries"], nlists=8, anchor_stride=37, k=TOPK, truth=truth,
     )
     return _i(out, "nprobe")
 

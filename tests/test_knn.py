@@ -8,7 +8,8 @@ from pyspark.sql import functions as F
 
 from vectorsearch_rbac_spark.sources import load_table
 from vectorsearch_rbac_spark.rbac import derive
-from vectorsearch_rbac_spark.operators import knn, ivf, ann, dynamic, layout, partitioning
+from vectorsearch_rbac_spark.functions import vector as V
+from vectorsearch_rbac_spark.operators import knn, ivf, ann, curation, dynamic, layout, partitioning, tuning
 
 
 @pytest.fixture(scope="module")
@@ -99,21 +100,6 @@ def test_lsh_numpy_kernel_matches_expr(t):
         for r in ann.cosine_topk_lsh(t["embeddings"], t["queries"], impl="numpy", **kw).collect()
     )
     assert expr_rows == np_rows and len(np_rows) > 0
-
-
-def test_cosine_bruteforce_numpy_matches_expr(t):
-    """The Arrow pair-scoring kernel behind the lsh truth build must
-    return EXACTLY the expression brute force's rows (j-order dot/norm
-    folds, NaN zero-norm parity, half-up round, −0.0 fold)."""
-    ke = sorted(
-        map(tuple, ann.cosine_topk_bruteforce(t["embeddings"], t["queries"], k=10).collect())
-    )
-    kn = sorted(
-        map(tuple, ann.cosine_topk_bruteforce(
-            t["embeddings"], t["queries"], k=10, impl="numpy"
-        ).collect())
-    )
-    assert ke == kn and len(ke) > 0
 
 
 def test_pq_numpy_kernel_matches_expr(t):
@@ -1365,40 +1351,82 @@ def test_impl_shim_accepts_only_numpy(t):
         assert _rows(fn(*args, k=10, impl="numpy")) == _rows(fn(*args, k=10)), fn.__name__
 
 
-def test_l2_bruteforce_numpy_kernel_matches_expr(t):
-    """l2_topk_bruteforce numpy (two-phase BLAS) ≡ expr on the fp16-quantized
-    frames the halfvec entry feeds it."""
-    from vectorsearch_rbac_spark.functions import vector as V
-
-    emb = t["embeddings"].select("vec_id", V.fp16_quantize("embedding").alias("embedding"))
-    qs = t["queries"].select("query_id", V.fp16_quantize("query_vector").alias("query_vector"))
-    a = sorted(map(tuple, ann.l2_topk_bruteforce(emb, qs, k=10).collect()))
-    b = sorted(map(tuple, ann.l2_topk_bruteforce(emb, qs, k=10, impl="numpy").collect()))
-    assert a == b and len(a) > 0
-
-
-def test_sparse_cosine_numpy_kernel_matches_expr(t):
-    """sparse_cosine_topk impl="numpy" (scatter-to-dense BLAS) ≡ the sparse
-    expression path, including high thresholds that empty some vectors
-    (zero-norm → NaN, which must sort last in both paths)."""
-    for thr in (0.15, 1.5):
-        a = sorted(map(tuple, ann.sparse_cosine_topk(
-            t["embeddings"], t["queries"], k=10, threshold=thr).collect()))
-        b = sorted(map(tuple, ann.sparse_cosine_topk(
-            t["embeddings"], t["queries"], k=10, threshold=thr, impl="numpy").collect()))
-        assert ([x[:2] for x in a] == [x[:2] for x in b]) and len(a) > 0
-        for ra, rb in zip(a, b):
-            assert ra[3] == rb[3]
-            assert (ra[2] == rb[2]) or (ra[2] != ra[2] and rb[2] != rb[2])  # NaN == NaN
+def _scan_truth(emb, qs, metric, vec, query_vec, k=10):
+    """knn.ground_truth over a single-id vector table, under a relation
+    that permits every document: the expression plan of an unfiltered
+    exact scan of ``vec`` against ``query_vec``."""
+    blocks = emb.select(
+        F.col("vec_id").alias("block_id"), F.lit(0).cast("long").alias("document_id"),
+        vec.alias("vector"),
+    )
+    queries = qs.select("query_id", query_vec.alias("query_vector"))
+    everyone = queries.select("query_id", F.lit(-1).alias("role_id"))
+    all_docs = blocks.select("document_id", F.lit(-1).alias("role_id")).distinct()
+    return knn.ground_truth(blocks, queries, everyone, all_docs, k, metric)
 
 
-def test_int8_numpy_kernel_matches_expr(t):
-    """int8_topk impl="numpy" (int64 matmul) ≡ expr bit-for-bit."""
-    from vectorsearch_rbac_spark.operators import curation
+def _thresholded(thr):
+    return lambda c: F.transform(
+        c, lambda x: F.when(F.abs(x.cast("double")) > thr, x.cast("double")).otherwise(0.0)
+    )
 
-    a = sorted(map(tuple, curation.int8_topk(t["embeddings"], t["queries"], k=10).collect()))
-    b = sorted(map(tuple, curation.int8_topk(t["embeddings"], t["queries"], k=10, impl="numpy").collect()))
-    assert a == b and len(a) > 0
+
+_DIST = ("query_id", "block_id", "distance", "rank")
+_DIST_SCHEMA = "struct<query_id:bigint,vec_id:bigint,distance:double,rank:int>"
+
+# name → (operator, metric, scored-input transform, truth columns,
+# documented output schema)
+_SCANS = {
+    "cosine": (
+        lambda e, q: ann.cosine_topk_bruteforce(e, q, k=10), "cosine", F.col, _DIST, _DIST_SCHEMA,
+    ),
+    "l2_fp16": (
+        lambda e, q: ann.l2_topk_bruteforce(
+            e.select("vec_id", V.fp16_quantize("embedding").alias("embedding")),
+            q.select("query_id", V.fp16_quantize("query_vector").alias("query_vector")), k=10,
+        ),
+        "l2", V.fp16_quantize, _DIST, _DIST_SCHEMA,
+    ),
+    "sparse_0.15": (
+        lambda e, q: ann.sparse_cosine_topk(e, q, k=10, threshold=0.15),
+        "cosine", _thresholded(0.15), _DIST, _DIST_SCHEMA,
+    ),
+    # 1.5 empties many vectors: zero norm → NaN, which must sort last
+    "sparse_1.5": (
+        lambda e, q: ann.sparse_cosine_topk(e, q, k=10, threshold=1.5),
+        "cosine", _thresholded(1.5), _DIST, _DIST_SCHEMA,
+    ),
+    "int8": (
+        lambda e, q: curation.int8_topk(e, q, k=10),
+        "ip", lambda c: curation.int8_quantize(c).cast("array<double>"),
+        ("query_id", "block_id", "CAST(-distance AS BIGINT)", "CAST(rank AS BIGINT)"),
+        "struct<query_id:bigint,vec_id:bigint,dot:bigint,rank:bigint>",
+    ),
+    "anchor_truth": (
+        lambda e, q: tuning.anchor_ivf_truth(e, q, k=10),
+        "l2", F.col, ("query_id", "block_id"), "struct<query_id:bigint,vec_id:bigint>",
+    ),
+}
+
+
+@pytest.mark.parametrize("scan", sorted(_SCANS))
+def test_exact_scan_matches_ground_truth(t, scan):
+    """Every brute-force top-k operator is the shared exact scan: it returns
+    EXACTLY ground_truth's rows (same 6-dp distances, NaN last, (distance,
+    id) tie order) on the vectors it actually scores — fp16-rounded for
+    halfvec, thresholded for sparse, int8-quantized with ip for int8 (dot =
+    −distance). With no queries it returns no rows, in its documented
+    schema."""
+    op, metric, scored, cols, schema = _SCANS[scan]
+    emb, qs = t["embeddings"], t["queries"]
+    truth = _scan_truth(emb, qs, metric, scored("embedding"), scored("query_vector"))
+    got = _rows(op(emb, qs))
+    assert got == _rows(truth.selectExpr(*cols)) and len(got) > 0
+    if scan == "sparse_1.5":
+        assert any(r[2] == "nan" for r in got)
+    empty = op(emb, qs.limit(0))
+    assert empty.schema.simpleString() == schema
+    assert empty.count() == 0
 
 
 def test_local_topk_query_chunking_row_identical(t):

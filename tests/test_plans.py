@@ -127,8 +127,13 @@ def test_pack_sequences_single_shuffle(spark, sf_dir):
 
 
 def test_int8_topk_no_vectors_cross_rank_shuffle(spark, sf_dir):
-    """Quantized arrays must be reduced to a scalar dot BEFORE the rank
-    exchange; queries broadcast (no shuffle of the embeddings side pre-score)."""
+    """Quantized arrays must be reduced to a scalar distance BEFORE the rank
+    exchange: everything between the query_id exchange and the scan kernel
+    is the kernel's (ids, distance) output, and no array column enters it.
+    Queries reach the kernel as a broadcast variable, so the plan has no
+    join at all."""
+    import re
+
     from vectorsearch_rbac_spark.operators import curation
     from vectorsearch_rbac_spark.rbac import derive
 
@@ -136,14 +141,15 @@ def test_int8_topk_no_vectors_cross_rank_shuffle(spark, sf_dir):
     qs = derive.derive_queries(emb, 100)
     df = curation.int8_topk(emb, qs, k=10)
     p = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p
+    assert "Join" not in p
     ex = p.find("Exchange hashpartitioning(query_id")
-    assert ex != -1
-    import re
+    kernel = p.find("MapInPandas", ex)
+    assert -1 < ex < kernel
+    below = p[ex:kernel]
     assert re.search(
-        r"Project \[query_id#\d+L?, vec_id#\d+L? AS block_id#\d+L?, aggregate\(zip_with", p[ex:]
-    ), "rank exchange input must be (ids, scalar dot) — arrays reduced pre-shuffle"
+        r"Project \[query_id#\d+L?, block_id#\d+L?, coalesce\(distance#\d+", below
+    ), "rank exchange input must be (ids, scalar distance)"
+    assert not re.search(r"vector|embedding|array<", below), "an array column enters the rank exchange"
 
 
 def test_tfidf_corpus_count_broadcast(spark, sf_dir):
@@ -778,6 +784,27 @@ def test_literal_df_arrow_path_and_fallback(spark):
     sddl = "a long, s struct<x:long,y:long>"
     assert literal_df(spark, srows, sddl).collect() == spark.createDataFrame(srows, sddl).collect()
     assert literal_df(spark, [], "a long, b int").count() == 0
+
+
+def test_tuning_curves_scan_no_python_rdd(spark, sf_dir):
+    """The probe lists and nprobe grids of both tuning curves are Arrow
+    literal frames: every RDD the plans scan is a checkpointed artifact,
+    none is a Python list shipped through applySchemaToPythonRDD (which
+    re-pickles its rows on every executed job)."""
+    import __spark_entry__ as entry
+
+    for fn in (entry.q_ivf_tuning_curve, entry.q_tuning_curve):
+        qe = fn(spark, sf_dir)._jdf.queryExecution()
+        assert "applySchemaToPythonRDD" not in qe.executedPlan().toString()
+        leaves = qe.optimizedPlan().collectLeaves()
+        lineages = [
+            leaves.apply(i).rdd().toDebugString()
+            for i in range(leaves.length())
+            if leaves.apply(i).nodeName() == "LogicalRDD"
+        ]
+        assert lineages, fn.__name__  # the checkpointed index / truth scans
+        for lineage in lineages:
+            assert "PythonRDD" not in lineage, (fn.__name__, lineage)
 
 
 def test_memoized_stat_prices_once_per_relation(spark):

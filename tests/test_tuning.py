@@ -169,27 +169,6 @@ def test_recall_cost_curve_numpy_matches_expr(fitted):
         )
 
 
-def test_anchor_curve_numpy_kernel_matches_expr(t, spark, sf_dir):
-    """The Arrow pair-scoring kernel (per-dim j-order accumulation,
-    half-up 6-dp round) must make anchor_ivf_truth and anchor_ivf_curve
-    return EXACTLY the expression path's rows — the pq/lsh kernel pin
-    applied to the tuning curve's dominant Q·N scan."""
-    from vectorsearch_rbac_spark.sources import load_table
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    qs = derive.derive_queries(emb, 100)
-    te = tuning.anchor_ivf_truth(emb, qs, k=10, impl="expr")
-    tn = tuning.anchor_ivf_truth(emb, qs, k=10, impl="numpy")
-    assert te.exceptAll(tn).count() == 0
-    assert tn.exceptAll(te).count() == 0
-    assert te.count() == tn.count() > 0
-    ce = tuning.anchor_ivf_curve(emb, qs, nlists=8, anchor_stride=37, k=10).collect()
-    cn = tuning.anchor_ivf_curve(
-        emb, qs, nlists=8, anchor_stride=37, k=10, impl="numpy"
-    ).collect()
-    assert sorted(map(tuple, ce)) == sorted(map(tuple, cn)) and len(ce) == 8
-
-
 def test_tune_ivf_end_to_end(fitted):
     out = tuning.tune_ivf(
         fitted["indexed"], fitted["queries"], fitted["C"], fitted["truth"],

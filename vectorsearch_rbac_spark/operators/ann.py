@@ -14,7 +14,34 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
-from .knn import topk_per_query
+from .knn import knn_topk_fast, topk_per_query
+
+
+def _exact_topk(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int,
+    metric: str,
+    id_col: str,
+    vec: F.Column,
+    query_vec: F.Column,
+) -> DataFrame:
+    """Exact brute-force top-k over a single-id vector table through the
+    shared scan kernel (:func:`knn.knn_topk_fast`): ``vec`` / ``query_vec``
+    are the columns actually scored (a quantized or thresholded form of
+    the stored vectors), and the result is (query_id, ``id_col``,
+    distance, rank) — 6-dp half-up distances, NaN last, (distance, id)
+    order, the same rows the expression scan (:func:`knn.ground_truth`)
+    ranks."""
+    blocks = embeddings.select(
+        F.col(id_col).alias("block_id"),
+        F.lit(0).cast("long").alias("document_id"),
+        vec.alias("vector"),
+    )
+    qs = queries.select("query_id", query_vec.alias("query_vector"))
+    return knn_topk_fast(blocks, qs, k, metric).select(
+        "query_id", F.col("block_id").alias(id_col), "distance", "rank"
+    )
 
 
 def cosine_topk_bruteforce(
@@ -23,133 +50,12 @@ def cosine_topk_bruteforce(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "expr",
 ) -> DataFrame:
-    """Exact cosine top-k: broadcast queries × scan, codegen'd distance,
-    window top-k. The oracle-checkable baseline for every ANN variant.
-    ``impl='numpy'`` scores the pairs through an Arrow kernel replicating
-    the expression's exact op sequence (j-order dot/norm folds, NaN on
-    zero norms, half-up 6-dp round, −0.0 fold) — pytest-pinned
-    row-identical; the sf0.01 oracle gate replays either (same rows)."""
-    if impl == "numpy":
-        scored = _cosine_pairs_numpy(embeddings, queries, id_col, vec_col, k=k)
-    else:
-        scored = (
-            embeddings.join(F.broadcast(queries.select("query_id", "query_vector")), how="cross")
-            # + 0.0 folds IEEE -0.0 (from rounding 1 - sim when sim ≈ 1+ε) to +0.0
-            .withColumn("distance", F.round(V.cosine_distance(vec_col, "query_vector"), 6) + F.lit(0.0))
-            .select("query_id", F.col(id_col).alias("block_id"), "distance")
-        )
-    w = topk_per_query(scored, k, id_col="block_id")
-    return w.select("query_id", F.col("block_id").alias(id_col), "distance", "rank")
-
-
-def _batch_topk_rows(D: "np.ndarray", ids: "np.ndarray", k: int) -> "np.ndarray":
-    """Per-batch candidate cut for two-phase top-k: for each query column
-    of the (n, Q) score matrix (float distances or negated integer dots),
-    the row indices of its k best rows under the SAME order the stage-2
-    window uses — score asc (NaN last, as Spark sorts NaN greater than any
-    double) with id tie-breaks. Returns a flat (Q·kk,) row-index array
-    (kk = min(k, n)); stage-2's global window re-ranks the survivors, so
-    emitting a superset per batch is safe and emitting exactly the
-    per-batch top-k is the tightest safe cut.
-
-    Selection is argpartition-then-sort-candidates (the ``local_topk``
-    idiom): a candidate threshold from a partial partition, then only the
-    at-or-below-threshold rows compete under the deterministic full order —
-    near-linear instead of Q full sorts per batch."""
-    if np.issubdtype(D.dtype, np.floating):
-        key = np.where(np.isnan(D), np.inf, D)
-    else:
-        key = D
-    n = D.shape[0]
-    kk = min(k, n)
-    part_idx = np.argpartition(key, kk - 1, axis=0)[:kk] if kk < n else None
-    sel = []
-    for qi in range(D.shape[1]):
-        col = key[:, qi]
-        if part_idx is None:
-            cand = np.arange(n)
-        else:
-            cand = np.flatnonzero(col <= col[part_idx[:, qi]].max())
-        sel.append(cand[np.lexsort((ids[cand], col[cand]))][:kk])
-    return np.concatenate(sel), kk
-
-
-def _cosine_pairs_numpy(
-    embeddings: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
-    k: int | None = None,
-) -> DataFrame:
-    """(query_id, block_id, distance) pairs via mapInPandas — bit-identical
-    to the expression path: dot and squared-norm folds accumulate per-dim
-    in the codegen fold's j-order ((0.0 + t0) ≡ t0), zero denominators map
-    to NaN (try_divide + coalesce parity), then 1 − sim, the half-up 6-dp
-    round, and + 0.0 to fold −0.0. Queries broadcast as one (Q, d) matrix,
-    so each corpus vector crosses the Arrow boundary once, not once per
-    query. ``k`` enables the two-phase pre-cut: each Arrow batch emits only
-    its per-query top-k (same rounded-distance + id order the global
-    window applies), so stage-2 ranks P·Q·k rows instead of N·Q — the
-    100 TB shape. ``k=None`` emits every pair (truth builds)."""
-    import pandas as pd
-
-    spark = embeddings.sparkSession
-    q_rows = queries.select("query_id", "query_vector").collect()
-    if not q_rows:
-        return spark.createDataFrame([], "query_id long, block_id long, distance double")
-    qids = np.asarray([r["query_id"] for r in q_rows], dtype=np.int64)
-    QM = np.stack([np.asarray(r["query_vector"], dtype=np.float64) for r in q_rows])
-    bc = spark.sparkContext.broadcast((qids, QM))
-
-    def part(batches):
-        qids_, QM_ = bc.value
-        nq = len(qids_)
-        d = QM_.shape[1]
-        # per-query norms: the same sequential fold the expr runs per row
-        qn = np.zeros(nq)
-        for j in range(d):
-            qn = qn + QM_[:, j] * QM_[:, j]
-        qn = np.sqrt(qn)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            ids = pdf[id_col].to_numpy()
-            dot = np.zeros((len(ids), nq))
-            xn = np.zeros(len(ids))
-            for j in range(d):
-                dot = dot + X[:, j][:, None] * QM_[:, j][None, :]
-                xn = xn + X[:, j] * X[:, j]
-            xn = np.sqrt(xn)
-            den = xn[:, None] * qn[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sim = np.where(den == 0.0, np.nan, dot / den)
-            dist = 1.0 - sim
-            dist = np.floor(dist * 1e6 + 0.5) / 1e6 + 0.0
-            if k is not None:
-                sel, kk = _batch_topk_rows(dist, ids, k)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids_, kk),
-                        "block_id": ids[sel],
-                        "distance": dist[sel, np.repeat(np.arange(nq), kk)],
-                    }
-                )
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.tile(qids_, len(ids)),
-                    "block_id": np.repeat(ids, nq),
-                    "distance": dist.ravel(),
-                }
-            )
-
-    out = embeddings.select(id_col, vec_col).mapInPandas(
-        part, schema="query_id long, block_id long, distance double"
-    )
-    # pandas→Arrow masks NaN as null; restore the expr path's explicit NaN
-    # (zero-norm rows must sort LAST ascending, a null would sort first)
-    return out.withColumn(
-        "distance", F.coalesce("distance", F.lit(float("nan")))
+    """Exact cosine top-k (pgvector ``<=>`` sequential scan): the
+    baseline every ANN variant is recall-checked against. Zero-norm
+    vectors score NaN and sort last."""
+    return _exact_topk(
+        embeddings, queries, k, "cosine", id_col, F.col(vec_col), F.col("query_vector")
     )
 
 
@@ -160,73 +66,13 @@ def l2_topk_bruteforce(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_vec_col: str = "query_vector",
-    impl: str = "expr",
 ) -> DataFrame:
-    """Exact L2 top-k over a single-id vector table (the halfvec / fp-tier
-    scan shape): broadcast queries × scan, 6-dp-rounded distance, window
-    top-k with id tie-breaks. ``impl='numpy'`` rides a two-phase Arrow
-    kernel (per-batch pre-cut, then the same global window) that is
-    BIT-identical to the expression fold: the squared-distance accumulates
-    per-dim in the codegen fold's j-order ((x_j−q_j)² added left-to-right,
-    (0.0 + t0) ≡ t0), then sqrt and the half-up 6-dp round mirroring
-    ``F.round``; pytest pins numpy ≡ expr row-for-row."""
-    qsel = queries.select("query_id", query_vec_col)
-    if impl == "numpy":
-        import pandas as pd
-
-        spark = embeddings.sparkSession
-        q_rows = qsel.collect()
-        if not q_rows:
-            return spark.createDataFrame(
-                [], f"query_id long, {id_col} long, distance double, rank int"
-            )
-        qids = np.asarray([r["query_id"] for r in q_rows], dtype=np.int64)
-        QM = np.stack([np.asarray(r[query_vec_col], dtype=np.float64) for r in q_rows])
-        bc = spark.sparkContext.broadcast((qids, QM))
-
-        def part(batches):
-            qids_, QM_ = bc.value
-            nq = len(qids_)
-            d = QM_.shape[1]
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                ids = pdf[id_col].to_numpy()
-                # per-dim j-order fold ≡ the expr's sequential (x−q)² sum
-                d2 = np.zeros((len(ids), nq))
-                for j in range(d):
-                    t = X[:, j][:, None] - QM_[:, j][None, :]
-                    d2 = d2 + t * t
-                D = np.sqrt(d2)
-                D = np.floor(D * 1e6 + 0.5) / 1e6 + 0.0
-                sel, kk = _batch_topk_rows(D, ids, k)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids_, kk),
-                        "block_id": ids[sel],
-                        "distance": D[sel, np.repeat(np.arange(nq), kk)],
-                    }
-                )
-
-        scored = embeddings.select(id_col, vec_col).mapInPandas(
-            part, schema="query_id long, block_id long, distance double"
-        ).withColumn(
-            # pandas→Arrow masks NaN as null (a NaN input component would
-            # surface as a null distance and sort FIRST); restore NaN
-            "distance", F.coalesce("distance", F.lit(float("nan")))
-        )
-    else:
-        scored = (
-            embeddings.join(F.broadcast(qsel), how="cross")
-            .withColumn(
-                "distance",
-                F.round(V.l2_distance(vec_col, query_vec_col), 6) + F.lit(0.0),
-            )
-            .select("query_id", F.col(id_col).alias("block_id"), "distance")
-        )
-    w = topk_per_query(scored, k, id_col="block_id")
-    return w.select("query_id", F.col("block_id").alias(id_col), "distance", "rank")
+    """Exact L2 top-k (pgvector ``<->`` sequential scan) over a single-id
+    vector table — the halfvec / fp-tier scan shape and the offline L2
+    truth builds."""
+    return _exact_topk(
+        embeddings, queries, k, "l2", id_col, F.col(vec_col), F.col(query_vec_col)
+    )
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
@@ -588,108 +434,23 @@ def sparse_cosine_topk(
     threshold: float = 0.15,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "expr",
 ) -> DataFrame:
     """Exact cosine top-k over magnitude-sparsified vectors (sparsevec
-    search parity): both sides keep dims with |v| > threshold; distance is
-    computed on the sparse representation only. ``impl='numpy'`` scatters
-    each Arrow batch's (indices, values) pairs into a dense slab and folds
-    dot and norms per-dim in ascending index order — BIT-identical to the
-    expression folds: the expr iterates a's stored pairs ascending probing
-    b (absent → 0.0 term) and sparse_norm folds stored values ascending;
-    the dense j-loop adds the same nonzero terms in the same order with
-    exact-identity 0.0 terms between them. Zero denominators map to NaN
-    (try_divide + coalesce parity, NaN sorts last), half-up 6-dp round;
-    pytest pins numpy ≡ expr."""
-    from ..functions import sparse as SV
+    search parity): both sides keep the dims with |v| > threshold. The
+    scan scores the zero-filled dense form, whose dot and norm folds add
+    the same nonzero terms in the same ascending-index order as the sparse
+    representation (the zeros are exact additive identities). A vector
+    with no surviving dim has zero norm, scores NaN and sorts last."""
 
-    e = embeddings.select(
-        id_col, SV.sparse_from_dense(vec_col, threshold).alias("sv")
-    ).select(id_col, F.col("sv.indices").alias("ie"), F.col("sv.values").alias("ve"))
-    qs = queries.select(
-        "query_id", SV.sparse_from_dense("query_vector", threshold).alias("sv")
-    ).select("query_id", F.col("sv.indices").alias("iq"), F.col("sv.values").alias("vq"))
-    if impl == "numpy":
-        import pandas as pd
-
-        spark = embeddings.sparkSession
-        q_rows = qs.collect()
-        if not q_rows:
-            return spark.createDataFrame(
-                [], f"query_id long, {id_col} long, distance double, rank int"
-            )
-        qids = np.asarray([r["query_id"] for r in q_rows], dtype=np.int64)
-        q_dim = max((max(r["iq"]) if r["iq"] else 0) for r in q_rows)
-        bc = spark.sparkContext.broadcast(
-            (qids, [(np.asarray(r["iq"], dtype=np.int64),
-                     np.asarray(r["vq"], dtype=np.float64)) for r in q_rows], q_dim)
+    def sparsified(c: str) -> F.Column:
+        return F.transform(
+            F.transform(c, lambda x: x.cast("double")),
+            lambda x: F.when(F.abs(x) > threshold, x).otherwise(F.lit(0.0)),
         )
 
-        def part(batches):
-            qids_, qsparse, qd = bc.value
-            nq = len(qids_)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ids = pdf[id_col].to_numpy()
-                n = len(ids)
-                # scatter width: covers every stored index on either side
-                # (1-indexed); dims absent from BOTH sides are zero in dot
-                # and in the stored-value norms, so padding is free
-                bd = 0
-                ie_list = [np.asarray(v, dtype=np.int64) for v in pdf["ie"]]
-                ve_list = [np.asarray(v, dtype=np.float64) for v in pdf["ve"]]
-                for iv in ie_list:
-                    if len(iv):
-                        bd = max(bd, int(iv.max()))
-                d = max(bd, qd, 1)
-                X = np.zeros((n, d))
-                for i, (iv, vv) in enumerate(zip(ie_list, ve_list)):
-                    if len(iv):
-                        X[i, iv - 1] = vv
-                QM = np.zeros((nq, d))
-                for i, (iv, vv) in enumerate(qsparse):
-                    if len(iv):
-                        QM[i, iv - 1] = vv
-                # per-dim j-order folds ≡ the expr's sequential sums (the
-                # scattered zeros are exact additive identities)
-                dot = np.zeros((n, nq))
-                xn2 = np.zeros(n)
-                qn2 = np.zeros(nq)
-                for j in range(d):
-                    dot = dot + X[:, j][:, None] * QM[:, j][None, :]
-                    xn2 = xn2 + X[:, j] * X[:, j]
-                    qn2 = qn2 + QM[:, j] * QM[:, j]
-                den = np.sqrt(xn2)[:, None] * np.sqrt(qn2)[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sim = np.where(den == 0.0, np.nan, dot / den)
-                D = 1.0 - sim
-                D = np.floor(D * 1e6 + 0.5) / 1e6 + 0.0
-                sel, kk = _batch_topk_rows(D, ids, k)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids_, kk),
-                        "block_id": ids[sel],
-                        "distance": D[sel, np.repeat(np.arange(nq), kk)],
-                    }
-                )
-
-        scored = e.mapInPandas(
-            part, schema="query_id long, block_id long, distance double"
-        ).withColumn(
-            # pandas→Arrow masks NaN as null; restore the expr path's
-            # explicit NaN (empty sparse vectors must sort LAST ascending)
-            "distance", F.coalesce("distance", F.lit(float("nan")))
-        )
-    else:
-        scored = e.join(F.broadcast(qs), how="cross").select(
-            "query_id",
-            F.col(id_col).alias("block_id"),
-            # + 0.0 folds IEEE -0.0 to +0.0 (self-distance rounds to zero)
-            (F.round(SV.sparse_cosine_distance("ie", "ve", "iq", "vq"), 6) + F.lit(0.0)).alias("distance"),
-        )
-    w = topk_per_query(scored, k, id_col="block_id")
-    return w.select("query_id", F.col("block_id").alias(id_col), "distance", "rank")
+    return _exact_topk(
+        embeddings, queries, k, "cosine", id_col, sparsified(vec_col), sparsified("query_vector")
+    )
 
 
 def semdedup_pairs(

@@ -335,76 +335,28 @@ def int8_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "expr",
 ) -> DataFrame:
     """Quantized brute-force top-k: both sides int8-quantized, similarity =
-    integer dot product, top-k by (-dot, id). The quantized-search scale
-    path — int8 arithmetic is exact in both engines (no float-sum ordering
-    sensitivity), so this operator has a bit-exact oracle, and at 100 TB the
-    scan reads 4× fewer bytes than float32 with SIMD-friendly math.
+    integer dot product, top-k by (-dot, id). At 100 TB the scan reads 4×
+    fewer bytes than float32 with SIMD-friendly math.
 
-    ``impl='numpy'`` rides a two-phase Arrow kernel: quantization stays in
-    the expression plan (the exact oracle's form), each batch does ONE
-    int64 matmul (bit-exact — |dot| ≤ 127²·d, no float path at all) and
-    emits its per-query top-k under the same (-dot, id) order, then the
-    global window re-ranks P·Q·k survivors. pytest pins numpy ≡ expr.
-    """
-    e = embeddings.select(id_col, int8_quantize(vec_col).alias("qe"))
-    q = queries.select("query_id", int8_quantize("query_vector").alias("qq"))
-    if impl == "numpy":
-        import numpy as np
-        import pandas as pd
+    The quantized vectors are scored by the shared exact scan with the
+    inner-product metric (distance = −dot): every product and partial sum
+    is an integer below 2⁵³ (|dot| ≤ 127²·d), so the float64 folds are
+    exact and ``dot`` is the integer dot product — the bit-exact oracle
+    form."""
+    from .ann import _exact_topk
 
-        spark = embeddings.sparkSession
-        q_rows = q.collect()
-        if not q_rows:
-            return spark.createDataFrame(
-                [], f"query_id long, {id_col} long, dot long, rank long"
-            )
-        qids = np.asarray([r["query_id"] for r in q_rows], dtype=np.int64)
-        QM = np.stack([np.asarray(r["qq"], dtype=np.int64) for r in q_rows])
-        bc = spark.sparkContext.broadcast((qids, QM))
+    def quantized(c: str) -> F.Column:
+        return int8_quantize(c).cast("array<double>")
 
-        def part(batches):
-            from .ann import _batch_topk_rows
-
-            qids_, QM_ = bc.value
-            nq = len(qids_)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.stack(pdf["qe"].to_numpy()).astype(np.int64)
-                ids = pdf[id_col].to_numpy()
-                dot = X @ QM_.T
-                # shared cut on the NEGATED integer dots — same (-dot, id)
-                # order the window applies; integer matmul is bit-exact
-                sel, kk = _batch_topk_rows(-dot, ids, k)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids_, kk),
-                        "block_id": ids[sel],
-                        "dot": dot[sel, np.repeat(np.arange(nq), kk)],
-                    }
-                )
-
-        scored = e.mapInPandas(
-            part, schema="query_id long, block_id long, dot long"
-        )
-    else:
-        scored = e.join(F.broadcast(q), how="cross").select(
-            "query_id",
-            F.col(id_col).alias("block_id"),
-            F.aggregate(
-                F.zip_with("qe", "qq", lambda a, b: a * b),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("dot"),
-        )
-    w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("block_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("block_id").alias(id_col), "dot", "rank")
+    out = _exact_topk(
+        embeddings, queries, k, "ip", id_col, quantized(vec_col), quantized("query_vector")
+    )
+    return out.select(
+        "query_id", id_col,
+        (-F.col("distance")).cast("long").alias("dot"),
+        F.col("rank").cast("long").alias("rank"),
     )
 
 

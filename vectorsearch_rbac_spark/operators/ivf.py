@@ -16,11 +16,11 @@ data — the same knob pgvector exposes as ``ivfflat.probes``.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
-from .knn import local_topk, topk_per_query
+from .knn import topk_per_query
 
 
 def kmeans_fit(
@@ -94,7 +94,6 @@ def ivf_search(
     k: int = 10,
     nprobe: int = 4,
     metric: str = "l2",
-    impl: str = "numpy",
 ) -> DataFrame:
     """ANN search: each query probes its ``nprobe`` nearest lists only.
 
@@ -115,26 +114,11 @@ def ivf_search(
     # r12 guide §6: Arrow literal path (no per-job Python re-pickle)
     probes = literal_df(spark, probe_rows, "query_id long, centroid_id int")
     candidate = indexed_blocks.join(F.broadcast(probes), "centroid_id")
-    if impl == "expr":
-        # Catalyst higher-order-function scoring: every float op is a
-        # sequential sum an ANSI-SQL oracle replays term-for-term
-        scored = candidate.join(F.broadcast(queries.select("query_id", "query_vector")), "query_id")
-        dist = {
-            "l2": V.l2_distance,
-            "cosine": V.cosine_distance,
-            "ip": V.neg_inner_product,
-        }[metric]
-        scored = scored.select(
-            "query_id", "block_id", "document_id",
-            F.round(dist("vector", "query_vector"), 6).alias("distance"),
-        )  # vectors pruned before the rank shuffle
-        return topk_per_query(scored, k).select("query_id", "block_id", "document_id", "distance", "rank")
-    # Arrow/BLAS throughput path (default): HOF distance math is
-    # interpreted row-at-a-time, so candidates are scored per partition
-    # with one einsum keyed by each row's query_id — the probe routing
-    # above decides WHAT is scored either way, and 6-dp rounding keeps
-    # the values engine-reproducible (the certified l2_fast precedent).
-    # Each partition emits ≤ Q×k rows into the stage-2 window merge.
+    # Candidates are scored per partition with one einsum keyed by each
+    # row's query_id (HOF distance math would run row-at-a-time); the
+    # probe routing above decides WHAT is scored, and 6-dp rounding keeps
+    # the values engine-reproducible. Each partition emits ≤ Q×k rows
+    # into the stage-2 window merge.
     from typing import Iterator
 
     import pandas as pd
@@ -164,14 +148,11 @@ def ivf_search(
                 D = -np.einsum("ij,ij->i", X, Qr)
             else:
                 raise ValueError(metric)
-            # HALF-UP 6-dp rounding (Spark ROUND semantics, sign-aware) so
-            # the default path's emitted distances match the impl="expr"
-            # formulation the SQL oracle replays — np.round is half-EVEN and
-            # diverges on exact .5 ties at the 6th decimal. "Match" is
-            # empirical, not a bit-level guarantee: Spark rounds doubles via
-            # BigDecimal on the shortest decimal repr, so when |D|*1e6
-            # floating error crosses a .5 boundary the two can still diverge
-            # (a repr-based Decimal round would close that gap if ever needed)
+            # HALF-UP 6-dp rounding (Spark ROUND semantics, sign-aware) —
+            # np.round is half-EVEN and diverges on exact .5 ties at the 6th
+            # decimal. The einsum sums are not the expression folds' j-order,
+            # so values match an expression scan empirically, not bit for bit
+            # (ivf_recall is checked by recall against exact truth)
             D = np.sign(D) * np.floor(np.abs(D) * 1e6 + 0.5) / 1e6 + 0.0
             qid = pdf["query_id"].to_numpy()
             bid = pdf["block_id"].to_numpy()

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
-from .knn import topk_per_query
+from ..sources import literal_df
 
 
 # ---------------------------------------------------------------------------
@@ -87,8 +87,8 @@ def recall_cost_curve(
     nprobes = sorted(set(nprobes or range(1, nlists + 1)))
     max_np = min(max(nprobes), nlists)
 
-    probes = spark.createDataFrame(
-        _probe_ranks(queries, centroids, max_np),
+    probes = literal_df(
+        spark, _probe_ranks(queries, centroids, max_np),
         "query_id long, centroid_id int, probe_rank int",
     )
     cand = indexed_blocks.join(F.broadcast(probes), "centroid_id")
@@ -153,7 +153,7 @@ def recall_cost_curve(
     ).groupBy("nprobe", "query_id").agg(F.count(F.lit(1)).alias("n_hit"))
     n_truth = truth.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_truth"))
     # every (nprobe, query) pair scores, including zero-hit ones
-    grid = spark.createDataFrame([(int(n),) for n in nprobes], "nprobe int").crossJoin(
+    grid = literal_df(spark, [(int(n),) for n in nprobes], "nprobe int").crossJoin(
         F.broadcast(n_truth)  # ladder × per-query truth counts: both dim-sized, broadcast the bigger
     )
     per_q = grid.join(F.broadcast(hits), ["nprobe", "query_id"], "left").select(
@@ -293,8 +293,8 @@ def scan_cost_points(
     nlists = len(centroids)
     nprobes = sorted(set(nprobes or range(1, nlists + 1)))
     max_np = min(max(nprobes), nlists)
-    probes = spark.createDataFrame(
-        _probe_ranks(queries, centroids, max_np),
+    probes = literal_df(
+        spark, _probe_ranks(queries, centroids, max_np),
         "query_id long, centroid_id int, probe_rank int",
     )
     sizes = indexed_blocks.groupBy("centroid_id").agg(
@@ -406,9 +406,10 @@ def _pair_scores_numpy(
     any ``carry_schema`` columns (e.g. ``"centroid_id int"``) repeated
     per row so callers can attach probe ranks without a corpus-sized
     re-join. The Q·N distance scan is the tuning curves' dominant cost
-    at scale — this kernel is the throughput path; the expression path
-    stays the oracle-replayable definition, pytest-pinned
-    row-identical."""
+    at scale: :func:`anchor_ivf_curve` scores through this kernel alone
+    (the oracle's expression replays its values), and
+    :func:`recall_cost_curve`'s l2 ``impl='numpy'`` path is pytest-pinned
+    row-identical to its expression path."""
     import pandas as pd
 
     spark = df.sparkSession
@@ -451,37 +452,15 @@ def _pair_scores_numpy(
     return df.select(id_col, vec_col, *carry_cols).mapInPandas(part, schema=schema)
 
 
-def _pair_scores(embeddings: DataFrame, queries: DataFrame, impl: str) -> DataFrame:
-    """(query_id, vec_id, 6-dp L2 distance) for every pair — the ONE
-    scoring pass :func:`anchor_ivf_truth` and :func:`anchor_ivf_curve`
-    share. ``impl='expr'`` is the oracle-replayable codegen fold;
-    ``'numpy'`` the Arrow kernel pinned row-identical to it."""
-    if impl == "numpy":
-        return _pair_scores_numpy(embeddings, queries)
-    return (
-        embeddings.crossJoin(F.broadcast(queries.select("query_id", "query_vector")))
-        .select(
-            "query_id", "vec_id",
-            F.round(V.l2_distance("embedding", "query_vector"), 6).alias("distance"),
-        )
-    )
-
-
-def anchor_ivf_truth(
-    embeddings: DataFrame, queries: DataFrame, k: int = 10, impl: str = "expr"
-) -> DataFrame:
+def anchor_ivf_truth(embeddings: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact (query_id, vec_id) L2 top-k over the embedding table — the
     ground truth :func:`anchor_ivf_curve` scores its recall against,
-    exposed so callers can compute it ONCE per corpus (it is
-    deterministic: 6-dp-rounded distances with id tie-breaks, the same
-    expression shape the DuckDB oracle replays). ``impl`` picks the
-    scoring kernel (see :func:`_pair_scores`)."""
-    wq = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-    return (
-        _pair_scores(embeddings, queries, impl)
-        .withColumn("rank", F.row_number().over(wq)).where(F.col("rank") <= k)
-        .select("query_id", "vec_id")
-    )
+    exposed so callers can compute it ONCE per corpus. It is the shared
+    exact scan (:func:`ann.l2_topk_bruteforce`): 6-dp-rounded distances
+    with id tie-breaks, the rows the DuckDB oracle's expression replays."""
+    from .ann import l2_topk_bruteforce
+
+    return l2_topk_bruteforce(embeddings, queries, k).select("query_id", "vec_id")
 
 
 def anchor_ivf_curve(
@@ -492,16 +471,15 @@ def anchor_ivf_curve(
     k: int = 10,
     nprobes: list[int] | None = None,
     truth: DataFrame | None = None,
-    impl: str = "expr",
 ) -> DataFrame:
     """The D9 (nprobe → recall@k, rows-scanned) curve with every step
     SQL-expressible, so the driver's DuckDB oracle replays the measurement
     end-to-end (parity: ``get_parameter.py:188`` — the reference measures
     its curve against a live index; the exact-oracle harness needs the
     index construction itself to be deterministic arithmetic).
-    ``impl='numpy'`` swaps the dominant Q·N scoring pass for the Arrow
-    kernel pinned row-identical to the expression fold
-    (:func:`_pair_scores`) — same emitted curve, oracle still replays it.
+    The dominant Q·N scoring pass is the Arrow pair kernel
+    (:func:`_pair_scores_numpy`), whose per-dim j-order fold and half-up
+    6-dp round the oracle's expression replays value for value.
 
     ``truth`` optionally supplies the exact (query_id, vec_id) top-k
     ground truth (:func:`anchor_ivf_truth`) — it is deterministic per
@@ -570,7 +548,7 @@ def anchor_ivf_curve(
     # (probes is keyed (query_id, centroid_id) — every query ranks every
     # list, so the join is exact, not an expansion)
     cand = (
-        _pair_scores(embeddings, queries, impl)
+        _pair_scores_numpy(embeddings, queries)
         .join(F.broadcast(assign), "vec_id")
         .join(F.broadcast(probes), ["query_id", "centroid_id"])
         .select("query_id", "vec_id", "probe_rank", "distance")
@@ -611,7 +589,7 @@ def anchor_ivf_curve(
         F.count(F.lit(1)).alias("n_hit")
     )
     n_truth = truth.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_truth"))
-    grid = spark.createDataFrame([(int(n),) for n in nprobes], "nprobe int").crossJoin(
+    grid = literal_df(spark, [(int(n),) for n in nprobes], "nprobe int").crossJoin(
         F.broadcast(n_truth)  # ladder × per-query truth counts: both dim-sized, broadcast the bigger
     )
     recall = (
