@@ -258,6 +258,67 @@ def test_versioned_store_rollback(t, tmp_path):
     assert vs.read(v1).count() < vs.read(v2).count()
 
 
+def test_dynamic_versioned_exact_and_leak_free(spark, tmp_path):
+    """knn_dynamic on a store where users hold 2+ roles that share
+    documents, so one block is reached through several roles: after build,
+    insert commit, deletion-vector delete and restore, its rows equal
+    ground_truth over the live blocks, no (query, block) repeats, ranks
+    run 1..n, and no row leaves the query's permitted documents. A user
+    with no roles gets no rows; an empty query_roles gives an empty frame
+    in the output schema."""
+    import numpy as np
+
+    from vectorsearch_rbac_spark.sources import literal_df
+
+    rng = np.random.default_rng(7)
+    n_docs, n_blocks = 12, 48
+    vecs = rng.standard_normal((n_blocks, 8)).astype(np.float32)
+    blocks = literal_df(
+        spark, [(b, b % n_docs, vecs[b].tolist()) for b in range(n_blocks)],
+        "block_id long, document_id long, vector array<float>",
+    )
+    # doc d is readable by roles {d%3, (d+1)%3} and, for even d, role 3
+    perms = [(d, r) for d in range(n_docs) for r in {d % 3, (d + 1) % 3} | ({3} if d % 2 == 0 else set())]
+    pa = literal_df(spark, perms, "document_id long, role_id int")
+    q_roles = {0: [0, 1], 1: [0, 1, 3], 2: [2], 3: []}  # query 3: a user with no roles
+    queries = literal_df(
+        spark, [(q, rng.standard_normal(8).astype(np.float32).tolist()) for q in q_roles],
+        "query_id long, query_vector array<float>",
+    )
+    qr = literal_df(spark, [(q, r) for q, rs in q_roles.items() for r in rs], "query_id long, role_id int")
+    shared = {frozenset(r for dd, r in perms if dd == d) & set(q_roles[1]) for d in range(n_docs)}
+    assert max(map(len, shared)) >= 2, "fixture must reach a block through several roles"
+    permitted = qr.join(pa, "role_id").select("query_id", "document_id").distinct()
+    cols = ["query_id", "block_id", "document_id", "distance", "rank"]
+
+    def check(live_ids, k=5):
+        got = dynamic.knn_dynamic(vs.read_current(), queries, qr, k=k)
+        live = blocks.where(F.col("block_id").isin(sorted(live_ids)))
+        rows = _rows(got.select(*cols))
+        assert rows == _rows(knn.ground_truth(live, queries, qr, pa, k=k)) and rows
+        assert len({(r[0], r[1]) for r in rows}) == len(rows)
+        for q in q_roles:
+            ranks = sorted(r[4] for r in rows if r[0] == q)
+            assert ranks == list(range(1, len(ranks) + 1))
+        assert not any(r[0] == 3 for r in rows)
+        assert got.join(permitted, ["query_id", "document_id"], "left_anti").count() == 0
+
+    vs = dynamic.VersionedStore(str(tmp_path / "store"), spark)
+    initial = set(range(0, n_blocks, 2))
+    vs.commit(dynamic.build_store(blocks.where(F.col("block_id") % 2 == 0), pa))
+    check(initial)
+    vs.commit(dynamic.insert_blocks(vs.read_current(), blocks.where(F.col("block_id") % 2 == 1), pa))
+    check(set(range(n_blocks)), k=n_blocks)  # k past every query's permitted set
+    dead = set(range(0, n_blocks, 3))
+    vs.delete_with_dv(blocks.where(F.col("block_id") % 3 == 0).select("block_id"))
+    check(set(range(n_blocks)) - dead)
+    vs.restore(0)
+    check(initial)
+
+    empty = dynamic.knn_dynamic(vs.read_current(), queries, qr.limit(0), k=5)
+    assert empty.columns == cols and empty.count() == 0
+
+
 def test_adaptive_strategy_routes(t, spark):
     from vectorsearch_rbac_spark.plans.strategy import adaptive_knn
 
@@ -1322,6 +1383,9 @@ _STRATEGIES = {
         p["opt"]["routing"], p["opt"]["assignment"], k=10, metric=m,
     ),
     "postfilter": lambda p, m: knn.knn_postfilter(*p["args"], k=10, expansion=4, metric=m),
+    "dynamic": lambda p, m: dynamic.knn_dynamic(
+        dynamic.build_store(p["args"][0], p["args"][3]), *p["args"][1:3], k=10, metric=m
+    ),
 }
 
 

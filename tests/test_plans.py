@@ -65,11 +65,53 @@ def test_rank_shuffle_carries_no_vectors(t):
         ), "exchange input must be the pruned (ids, distance) projection"
 
 
-def test_dynamic_search_prunes_partitions(t):
-    store = dynamic.build_store(t["documentblocks"], t["permission_assignment"])
-    df = dynamic.knn_dynamic(store, t["queries"], t["query_roles"], k=10)
-    p = _plan(df)
+def test_dynamic_search_prunes_partitions(t, spark, tmp_path):
+    """knn_dynamic over a committed store with a deletion vector reads the
+    store once: routing is a broadcast member-role join (no comb_role
+    aggregate, no second store scan), the DV read adds no dedup, and the
+    top-k merge — still rank-limited map-side — is the plan's only shuffle."""
+    import re
+
+    vs = dynamic.VersionedStore(str(tmp_path / "store"), spark)
+    vs.commit(dynamic.build_store(t["documentblocks"], t["permission_assignment"]))
+    vs.delete_with_dv(t["documentblocks"].where(F.col("block_id") % 7 == 0).select("block_id"))
+    # checkpointed query inputs: the derivation's own shuffles stay out
+    queries, query_roles = t["queries"].localCheckpoint(), t["query_roles"].localCheckpoint()
+    p = _plan(dynamic.knn_dynamic(vs.read_current(), queries, query_roles, k=10))
     assert "BroadcastHashJoin" in p and "SortMergeJoin" not in p
+    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", p)
+    assert len(scans) == 2 and sum("comb_role" in c for c in scans) == 1, scans  # store + DV
+    assert not re.search(r"Aggregate\(keys=\[comb_role", p), "no comb_role routing table"
+    shuffles = re.findall(r"(?<!Broadcast)Exchange (\w+\(?\w*)", p)
+    assert shuffles == ["hashpartitioning(query_id"], shuffles
+    assert "WindowGroupLimit" in p and "Partial" in p, "dense_rank keeps the map-side rank limit"
+
+
+def test_read_current_starts_no_job(spark, tmp_path):
+    """VersionedStore reads pass the schema recorded at commit, so neither
+    the snapshot nor its deletion-vector files pay a footer-inference job."""
+    import time
+
+    vs = dynamic.VersionedStore(str(tmp_path / "store"), spark)
+    vs.commit(spark.range(20).withColumnRenamed("id", "block_id"))
+    vs.delete_with_dv(spark.range(3).withColumnRenamed("id", "block_id"))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("t_read_current", "read_current")
+        live = vs.read_current()
+        sc.setJobGroup("t_read_control", "inferred read")
+        spark.read.parquet(vs._path(0))  # control: schema inference runs a job
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the tracker in order: once the control's job is
+    # visible, any job read_current started is visible too
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup("t_read_control") and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup("t_read_control"), "control job never seen"
+    assert tracker.getJobIdsForGroup("t_read_current") == []
+    assert sorted(r["block_id"] for r in live.collect()) == list(range(3, 20))
 
 
 def test_scan_column_pruning(spark, sf_dir):
@@ -767,7 +809,7 @@ def test_literal_df_arrow_path_and_fallback(spark):
     tables (Arrow path), not Python-RDD scans — the classic list form
     re-pickles rows through the Py4J bridge on EVERY executed job
     (measured ~0.27 s per subtree even at 100 rows). Schema and values
-    must match the classic path exactly; unsupported types fall back."""
+    must match the classic path exactly."""
     from vectorsearch_rbac_spark.sources import literal_df
 
     rows = [(1, 0, "a", 1.5, ["x", "y"]), (2, 1, "b", -2.0, [])]
@@ -779,11 +821,28 @@ def test_literal_df_arrow_path_and_fallback(spark):
     assert "ExistingRDD" not in fast._jdf.queryExecution().executedPlan().toString(), (
         "literal frame must not execute as a Python-RDD scan"
     )
-    # unsupported (struct) schema and empty input fall back, same results
+    # nested (struct) schema and empty input match the classic path too
     srows = [(1, (2, 3))]
     sddl = "a long, s struct<x:long,y:long>"
     assert literal_df(spark, srows, sddl).collect() == spark.createDataFrame(srows, sddl).collect()
     assert literal_df(spark, [], "a long, b int").count() == 0
+
+
+def test_literal_df_keeps_nulls_and_nan(spark):
+    """Each column is typed by the schema: a null long is accepted, a NaN
+    double stays NaN (not null), and array<float> rows keep their values."""
+    import math
+
+    from vectorsearch_rbac_spark.sources import literal_df
+
+    rows = [(1, None, float("nan"), [0.5, -1.25]), (None, 7, None, None)]
+    df = literal_df(spark, rows, "a long, b long, x double, v array<float>")
+    assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    got = sorted(df.collect(), key=lambda r: r["a"] is None)
+    assert (got[0]["a"], got[0]["b"], got[0]["v"]) == (1, None, [0.5, -1.25])
+    assert math.isnan(got[0]["x"])
+    assert (got[1]["a"], got[1]["b"], got[1]["x"], got[1]["v"]) == (None, 7, None, None)
+    assert df.where(F.isnan("x")).count() == 1 and df.where(F.col("x").isNull()).count() == 1
 
 
 def test_tuning_curves_scan_no_python_rdd(spark, sf_dir):
@@ -826,6 +885,19 @@ def test_memoized_stat_prices_once_per_relation(spark):
     assert len(calls) == 1
     # a different tag over the same relation is a distinct stat
     assert hints.memoized_stat(df, "t_memo_other", lambda: 42) == 42
+
+
+def test_memoized_stat_keyed_by_application(spark):
+    """A stat priced under another application (a stopped session) is
+    neither served nor kept: the memo holds the live application only."""
+    from vectorsearch_rbac_spark.operators import hints
+
+    df = spark.range(5)
+    stale = ("app-stopped", df.semanticHash(), "t_memo_app")
+    hints._STAT_CACHE[stale] = 99
+    assert hints.memoized_stat(df, "t_memo_app", lambda: 5) == 5
+    assert stale not in hints._STAT_CACHE
+    assert {k[0] for k in hints._STAT_CACHE} == {spark.sparkContext.applicationId}
 
 
 def test_mask_build_single_doc_exchange(spark):

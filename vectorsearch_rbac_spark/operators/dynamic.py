@@ -7,28 +7,23 @@ of roles that may reach the document); ``hnsw/insertion.py`` and
 ``search.py:17`` answers a query by scanning only the partitions whose
 comb_role intersects the user's roles.
 
-Spark-native form: the store is a comb_role-keyed DataFrame (on disk:
-``partitionBy(comb_role)`` parquet — see ``partitioning.write_partitioned``).
-Maintenance is incremental set algebra (union new / anti-join deleted) —
-exactly the lakehouse pattern (Delta/Iceberg MERGE); no per-partition graph
-index to rebuild, because partition pruning + vectorized scan is the
-cluster-scale substitute for HNSW (SURVEY.md §3).
-
-Scale notes: the store is the 100 TB fact side and is only unioned /
-anti-joined / scanned; routing tables (comb_role → member roles, query →
-comb_role) are dim-sized and broadcast. A search scans only the partitions
-whose comb_role contains one of the user's roles — membership of a doc in
-such a partition *is* the permission proof, so no per-block permission
-re-check is needed (the same invariant the reference's partition design
-guarantees).
+Spark-native form: the store is a comb_role-keyed DataFrame, kept by
+:class:`VersionedStore` as parquet snapshots plus deletion-vector files;
+maintenance is set algebra (union new / anti-join deleted), the
+Delta/Iceberg MERGE pattern, and a vectorized scan stands in for the
+per-partition HNSW index (SURVEY.md §3). A search reads the store once,
+routing each row by its comb_role's member roles against the broadcast
+query roles: membership of a doc in a comb_role that shares a user role
+*is* the permission proof, so no per-block re-check is needed.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from .knn import _METRICS, _grouped_topk, topk_per_query
+from .knn import _METRICS, _grouped_topk
 
 
 def _doc_comb(permission_assignment: DataFrame) -> DataFrame:
@@ -216,8 +211,10 @@ class VersionedStore:
     so rollback is opening an older snapshot — O(1), exact, and concurrent
     readers are never disturbed. On Delta/Iceberg this maps to native time
     travel (``VERSION AS OF``); plain parquet gets the same semantics from
-    version-suffixed directories written via :func:`insert_blocks` /
-    :func:`delete_blocks` outputs.
+    version-suffixed directories. Reads start no Spark job: ``commit``
+    records each version's schema for ``.schema(...)`` reads (a bare
+    ``read.parquet`` infers it in a job). Snapshots are unpartitioned:
+    pruning a ``partitionBy(comb_role)`` layout is out of scope.
 
     Scale: each version only rewrites partitions the mutation touched is the
     Delta/Iceberg refinement; the plain-parquet form here rewrites the store
@@ -228,32 +225,33 @@ class VersionedStore:
     def __init__(self, base_path: str, spark=None):
         self.base_path = base_path.rstrip("/")
         self._spark = spark
-        self.versions: list[int] = []
+        self._schemas: dict[int, StructType] = {}  # live version -> written schema
         self._dvs: dict[int, int] = {}  # version -> number of DV files
 
     def _path(self, version: int) -> str:
         return f"{self.base_path}/v={version}"
 
     @property
+    def versions(self) -> list[int]:
+        return list(self._schemas)
+
+    @property
     def latest_version(self) -> int:
         return self.versions[-1] if self.versions else -1
 
-    def commit(self, store: DataFrame, partition_key: str | None = None) -> int:
+    def commit(self, store: DataFrame) -> int:
         """Write the next version; returns its number."""
         v = self.latest_version + 1
-        w = store.write.mode("overwrite")
-        if partition_key:
-            w = w.partitionBy(partition_key)
-        w.parquet(self._path(v))
+        store.write.mode("overwrite").parquet(self._path(v))
         self._spark = self._spark or store.sparkSession
-        self.versions.append(v)
+        self._schemas[v] = store.schema
         return v
 
     def read(self, version: int | None = None) -> DataFrame:
         v = self.latest_version if version is None else version
-        if v not in self.versions:
+        if v not in self._schemas:
             raise ValueError(f"unknown version {v}; have {self.versions}")
-        return self._spark.read.parquet(self._path(v))
+        return self._spark.read.schema(self._schemas[v]).parquet(self._path(v))
 
     def restore(self, version: int) -> int:
         """Roll back: re-commit the old snapshot as the new latest version
@@ -275,29 +273,31 @@ class VersionedStore:
         file; returns the DV sequence number. No snapshot is rewritten."""
         v = self.latest_version
         seq = self._dvs.setdefault(v, 0)
-        deleted_ids.select(F.col(id_col).alias("_dv_id")).write.mode("overwrite").parquet(
-            self._dv_path(v, seq)
-        )
+        key = self._schemas[v][id_col].dataType  # DV files share the snapshot key's type
+        dv = deleted_ids.select(F.col(id_col).cast(key).alias("_dv_id"))
+        dv.write.mode("overwrite").parquet(self._dv_path(v, seq))
         self._dvs[v] = seq + 1
         return seq
 
     def read_current(self, version: int | None = None, id_col: str = "block_id") -> DataFrame:
         """Snapshot MINUS its accumulated deletion vectors (the live view).
-        ``read()`` stays the raw snapshot — time travel sees pre-DV state."""
+        ``read()`` stays the raw snapshot — time travel sees pre-DV state.
+        No distinct on the DV keys: a left-anti join ignores repeats, and a
+        distinct would add an aggregate and an exchange to every read."""
         v = self.latest_version if version is None else version
         base = self.read(v)
         n = self._dvs.get(v, 0)
         if n == 0:
             return base
-        dv = self._spark.read.parquet(*[self._dv_path(v, s) for s in range(n)])
-        return base.join(F.broadcast(dv.distinct()), base[id_col] == dv["_dv_id"], "left_anti")
+        key = self._schemas[v][id_col].dataType.simpleString()
+        dv = self._spark.read.schema(f"_dv_id {key}").parquet(*[self._dv_path(v, s) for s in range(n)])
+        return base.join(F.broadcast(dv), base[id_col] == dv["_dv_id"], "left_anti")
 
     def compact_dvs(self, id_col: str = "block_id") -> int:
         """Fold the latest version's DVs into a new snapshot (the OPTIMIZE /
         rewrite step): commits base-minus-DV as the next version and clears
         the DV chain for it."""
-        v = self.commit(self.read_current(id_col=id_col))
-        return v
+        return self.commit(self.read_current(id_col=id_col))
 
     def vacuum(self, keep_last: int = 2) -> list[int]:
         """Retention: drop snapshot directories older than the last
@@ -312,19 +312,17 @@ class VersionedStore:
             # the stale in-memory DV counter — retention covers DV space
             shutil.rmtree(f"{self.base_path}/dv/v={v}", ignore_errors=True)
             self._dvs.pop(v, None)
-            self.versions.remove(v)
+            del self._schemas[v]
         return expire
+
+
+def _member_roles():  # a comb_role key's role ids, one row each
+    return F.explode(F.transform(F.split("comb_role", ","), lambda c: c.cast("int")))
 
 
 def comb_role_members(store: DataFrame) -> DataFrame:
     """comb_role → member role_id (exploded routing dimension, broadcast)."""
-    return (
-        store.select("comb_role").distinct()
-        .select(
-            "comb_role",
-            F.explode(F.transform(F.split("comb_role", ","), lambda c: c.cast("int"))).alias("role_id"),
-        )
-    )
+    return store.select("comb_role").distinct().select("comb_role", _member_roles().alias("role_id"))
 
 
 def knn_dynamic(
@@ -334,30 +332,34 @@ def knn_dynamic(
     k: int = 10,
     metric: str = "l2",
 ) -> DataFrame:
-    """Search the dynamic store: scan only partitions whose comb_role
-    contains one of the query's roles, exact top-k merge.
+    """Search the dynamic store: score only the blocks whose comb_role
+    shares a role with the query, exact top-k merge.
 
     Parity: ``dynamic_partition/search.py:17`` (partition lookup by role
-    intersection, per-partition search, merge). Exact: a doc is in a scanned
-    partition iff its access set intersects the user's roles — precisely the
-    RBAC predicate — so recall is 1.0 with no per-block re-check.
+    intersection, per-partition search, merge). Exact: a doc is reached iff
+    its access set intersects the user's roles — precisely the RBAC
+    predicate — so recall is 1.0 with no per-block re-check. One store
+    pass: a block reached through several roles is scored per role;
+    ``dense_rank`` ties those copies (distinct blocks never tie) and the
+    dedup after the ``rank <= k`` cut keeps one, reusing the window's
+    query_id partitioning, so the top-k merge stays the only shuffle.
     """
     dist = _METRICS[metric]
-    qpart = (
-        F.broadcast(query_roles)
-        .join(comb_role_members(store), "role_id")
-        .select("query_id", "comb_role")
-        .distinct()
-    )
     scored = (
-        store.join(F.broadcast(qpart), "comb_role")  # partition pruning
+        store.select("block_id", "document_id", "vector", _member_roles().alias("role_id"))
+        .join(F.broadcast(query_roles.select("query_id", "role_id")), "role_id")
         .join(F.broadcast(queries.select("query_id", "query_vector")), "query_id")
         .select(
             "query_id", "block_id", "document_id",
             F.round(dist("vector", "query_vector"), 6).alias("distance"),
         )
     )
-    return topk_per_query(scored, k).select("query_id", "block_id", "document_id", "distance", "rank")
+    w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("block_id").asc())
+    return (
+        scored.withColumn("rank", F.dense_rank().over(w))
+        .where(F.col("rank") <= k)
+        .dropDuplicates(["query_id", "block_id"])
+    )
 
 
 # ------------------------------------------------------------- role churn
@@ -497,8 +499,6 @@ def role_insert_decision(
             ),
         ).alias("cost"),
     )
-    from pyspark.sql import Window
-
     w = Window.orderBy(F.col("cost").asc_nulls_last(), F.col("partition_id").asc())
     return (
         existing.unionByName(new_cand)

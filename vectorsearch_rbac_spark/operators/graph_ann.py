@@ -57,7 +57,7 @@ Design for a cluster:
   distributes like any other relation.
 - Results merge with the repo's standard two-phase top-k (per-partition
   candidates → global rank), so RBAC routing composes: restrict the
-  partition set per query exactly as ``knn_budget``/``knn_dynamic`` do.
+  partition set per query exactly as ``knn_budget`` does.
 
 Approximate op ⇒ recall-checked (``ann_recall`` 'graph' member + pytest
 floor), no SQL oracle — same basis as IVF/PQ/LSH. The EXACT-build
@@ -897,9 +897,11 @@ def knn_dynamic_graph(
     query beam-searches ONLY the partitions its roles reach, and the
     per-partition candidates merge through the global rank.
 
-    Spark shape: the (query → comb_role) routing is the same broadcast
-    role-intersection join ``knn_dynamic`` uses; the per-partition search
-    is a COGROUPED applyInPandas — partition blocks on one side, that
+    Spark shape: the (query → comb_role) routing joins the broadcast query
+    roles to :func:`~.dynamic.comb_role_members` (the store's distinct
+    comb_role keys, exploded), because the cogroup needs one row per routed
+    (query, comb_role) pair; the per-partition search is a COGROUPED
+    applyInPandas — partition blocks on one side, that
     partition's routed queries on the other — so a partition's graph is
     built/searched once regardless of how many queries route to it, work
     scales with Σ(partition × its queries), and partitions with no routed

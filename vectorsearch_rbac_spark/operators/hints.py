@@ -29,17 +29,20 @@ from pyspark.sql import functions as F
 BROADCAST_LIMIT_BYTES: int = 256 << 20
 
 # Session-lifetime memo for relation-derived scalar stats (row counts that
-# price broadcast gates), keyed by the relation's semanticHash. The gate's
-# stats play the role TABLE STATISTICS play on a real cluster: an
-# artifact-scale property of the relation, priced once, not a job per
-# operator call. A first call pays one sub-second aggregate; every later
-# call over a semantically identical relation reads the memo (measured:
-# the per-call form cost +0.2-1.0 s on every mask-kernel bench entry).
-_STAT_CACHE: dict[tuple[int, str], int] = {}
+# price broadcast gates), keyed by (application id, relation semanticHash,
+# tag). The gate's stats play the role TABLE STATISTICS play on a real
+# cluster: an artifact-scale property of the relation, priced once, not a
+# job per operator call. A first call pays one sub-second aggregate; every
+# later call over a semantically identical relation reads the memo
+# (measured: the per-call form cost +0.2-1.0 s on every mask-kernel bench
+# entry). An insert drops every other application's entries, so the memo
+# holds the live session's stats only (the ``_cached`` index-cache rule).
+_STAT_CACHE: dict[tuple[str, int, str], int] = {}
 
 
 def memoized_stat(df: DataFrame, tag: str, compute) -> int:
-    """Return ``compute()``, memoized per (relation semanticHash, tag).
+    """Return ``compute()``, memoized per (application, relation
+    semanticHash, tag).
 
     ``semanticHash`` is a driver-side plan analysis — no Spark job. Two
     semantically identical plans share one entry (exactly the reuse the
@@ -49,13 +52,16 @@ def memoized_stat(df: DataFrame, tag: str, compute) -> int:
     broadcast decision, never change results, and mutating inputs under a
     live session already voids Spark's own caching assumptions."""
     try:
-        key = (df.semanticHash(), tag)
+        key = (df.sparkSession.sparkContext.applicationId, df.semanticHash(), tag)
     except Exception:  # pragma: no cover — exotic plans; just recompute
         return compute()
     try:
         return _STAT_CACHE[key]
     except KeyError:
-        _STAT_CACHE[key] = v = int(compute())
+        v = int(compute())
+        for stale in [k for k in _STAT_CACHE if k[0] != key[0]]:
+            del _STAT_CACHE[stale]
+        _STAT_CACHE[key] = v
         return v
 
 

@@ -31,14 +31,6 @@ TABLES = [
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# DDL scalar type → pandas dtype, for literal_df's Arrow fast path.
-_PD_DTYPES = {
-    "long": "int64", "bigint": "int64", "int": "int32", "integer": "int32",
-    "smallint": "int16", "tinyint": "int8", "double": "float64",
-    "float": "float32", "boolean": "bool", "string": "object",
-}
-
-
 def literal_df(spark: SparkSession, rows, schema: str):
     """Small driver-literal DataFrame via the ARROW path (guide §6).
 
@@ -46,51 +38,25 @@ def literal_df(spark: SparkSession, rows, schema: str):
     re-pickled through the Py4J/socket bridge EVERY TIME a job executes the
     scan — measured ~0.27 s per executed subtree even at 100 rows, paid per
     call by every operator that embeds a literal relation (mask positions,
-    IVF probe lists, tuning grids, BPE rules). A pandas/Arrow-built frame
-    becomes a JVM-local table instead (~0.03 s construct, no per-job
-    Python round-trip). Falls back to the classic path for empty input or
-    non-scalar schemas (arrays/structs), where Arrow conversion may
-    silently fall back anyway.
+    IVF probe lists, tuning grids, BPE rules). An Arrow-built frame becomes
+    a JVM-local table instead (no per-job Python round-trip).
 
-    ``rows`` is a sequence of tuples matching ``schema`` ("name type,
-    ..."), exactly as the classic ``createDataFrame`` sites passed them.
+    ``rows`` is a sequence of tuples matching the DDL ``schema`` ("name
+    type, ..."), exactly as the classic ``createDataFrame`` sites passed
+    them. Each column becomes an Arrow array of the schema's own type, so
+    ``None`` is null in every type and a NaN double stays NaN.
     """
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
-    fields = []
-    # split on top-level commas only (array<...> carries none, but guard
-    # against future nested generics)
-    depth, start, parts = 0, 0, []
-    for i, c in enumerate(schema):
-        if c == "<":
-            depth += 1
-        elif c == ">":
-            depth -= 1
-        elif c == "," and depth == 0:
-            parts.append(schema[start:i])
-            start = i + 1
-    parts.append(schema[start:])
-    for part in parts:
-        bits = part.strip().split(" ", 1)
-        if len(bits) != 2:
-            return spark.createDataFrame(rows, schema)
-        t = bits[1].strip().lower()
-        if t.startswith("array<") and t.endswith(">") and t[6:-1] in _PD_DTYPES:
-            fields.append((bits[0], "object"))
-        elif t in _PD_DTYPES:
-            fields.append((bits[0], _PD_DTYPES[t]))
-        else:
-            return spark.createDataFrame(rows, schema)
-    rows = list(rows)
-    if not rows:
-        return spark.createDataFrame(rows, schema)
-    pdf = pd.DataFrame(
-        {
-            name: pd.Series([r[i] for r in rows], dtype=dt)
-            for i, (name, dt) in enumerate(fields)
-        }
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
     )
-    return spark.createDataFrame(pdf, schema=schema)
+    return spark.createDataFrame(table, schema=struct)
 
 
 def get_spark(app: str = "vectorsearch-rbac-spark", shuffle_partitions: int = 32) -> SparkSession:
